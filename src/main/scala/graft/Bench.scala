@@ -40,7 +40,7 @@ object Bench {
         // is a distributed store whose write bandwidth this host cannot
         // emulate either way. Parameterised: SPARK_GRAFT_WAREHOUSE
         // overrides (e.g. to point a durability test at real disk).
-        // Measured (QueryProbe med-of-7, both orders): q89 0.35->0.18 s,
+        // Measured (med-of-7, both orders): q89 0.35->0.18 s,
         // q114 2.69->2.16 s best-window, q137 1.72->1.65 s, q90/q129
         // neutral-to-better.
         .config("spark.sql.warehouse.dir",

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Why memoized: `newSession()` builds a fresh SessionState and starts
   * with a cold [[Tables]] read cache — measured ~1.3 s per call at the
-  * sf1 point (Q81ShapeProbe: clone-per-call 2.92 s vs reused-clone
+  * sf1 point (r14 A/B: clone-per-call 2.92 s vs reused-clone
   * 1.62 s end-to-end). One clone per (caller, posture) amortizes that to
   * zero across repeated calls, which is exactly the bench's fresh-plan
   * methodology and any real pipeline's steady state.

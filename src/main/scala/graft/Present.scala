@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions.col
   *
   * WHICH sort a query gets is a derived RULE, not a per-query pin (r14
   * verdict Missing #4 — eight queries carried hand `.orderBy` pins with
-  * per-query SortModeProbe citations; a new fact-sized query would have
+  * per-query A/B citations; a new fact-sized query would have
   * re-required hand judgment):
   *
   *   range sort  ⇔  un-reduced fan-in rows > [[Present.RangeSortRows]]
@@ -63,7 +63,7 @@ import org.apache.spark.sql.functions.col
   * fact-sized output through one partition (q10 −10.9 s, q03 −0.5 s,
   * q05 −0.5 s, q27 −0.5 s, q18/q19/q29/q37/q90 each −0.1…−0.6 s). The full
   * two-mode measurement table is committed in `SORT_THRESHOLD.json`
-  * (tools: SortRuleCalibrate + SortModeProbe, r15).
+  * (r15).
   *
   * The threshold is MEASURED, not guessed: at the sf1 calibration point
   * every range-better query fans ≥1.0M rows (events) and every

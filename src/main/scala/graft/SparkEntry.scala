@@ -26,10 +26,7 @@ object SparkEntry {
     */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    // AQE on by default (runtime coalescing + skew splitting is the at-scale
-    // posture); SPARK_GRAFT_AQE=false lets the bench isolate its per-stage
-    // scheduling cost on tiny inputs.
-    "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"),
+    "spark.sql.adaptive.enabled" -> "true",
     // (Measured: forcing size-based AQE coalescing — parallelismFirst=false
     // — serializes genuinely parallel work at bench scale for no net win;
     // the default, which only merges empty/sub-minPartitionSize reads,
@@ -44,7 +41,7 @@ object SparkEntry {
     // DSv2 parquet reads + footer-metadata aggregate pushdown: a filterless
     // count/min/max scan is answered from rowgroup statistics instead of a
     // data pass (the at-scale posture: corpus-wide counts over 100 TB touch
-    // no pages). Measured (tools.AggPushProbe, min-of-5): q01 count 2.1x
+    // no pages). Measured (r5 A/B, min-of-5): q01 count 2.1x
     // faster, and the V2 scan path is neutral-to-faster on every probed
     // shape (project/filter/join/agg/sort/dedup, 0.69-0.98x). Catalog
     // tables with bucket specs stay on the V1 path, so the bucketed

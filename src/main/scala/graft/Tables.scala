@@ -99,8 +99,7 @@ object Tables {
     * counts per-task scheduling overhead crosses per-task compute well
     * before 32 tasks (measured ~8-20% faster fresh-plan latency at 16 vs
     * 32 across scan/join/agg/window shapes, q13's 600k-row aggregate
-    * included); on a cluster this cap would be executor slots, and the 10x
-    * ScaleProbe corpus keeps its own 32-file layout.
+    * included); on a cluster this cap would be executor slots.
     */
   private def stageFileCount(bytes: Long): Int =
     math.min(16L, math.max(4L, bytes / (64L << 10))).toInt

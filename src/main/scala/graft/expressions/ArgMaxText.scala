@@ -2,10 +2,9 @@ package graft.expressions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, SparkSession}
@@ -146,18 +145,12 @@ object ArgMaxText {
     }
   }
 
-  private val info = new ExpressionInfo(classOf[ArgMaxText].getName, name)
-
   private[expressions] val builder: Seq[Expression] => Expression = { c =>
     require(c.size == 1, s"$name expects (struct(score, token))")
     ArgMaxText(c.head)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-
   def argMaxTextCol(spark: SparkSession)(scoreAndToken: Column): Column = {
-    register(spark); call_function(name, scoreAndToken)
+    GraftFunctions.registerAll(spark); call_function(name, scoreAndToken)
   }
 }

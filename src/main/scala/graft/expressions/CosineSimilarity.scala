@@ -1,11 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression: cosine similarity of two float- or
   * double-array columns, computed in double. Mixed widths are fine — e.g. a
@@ -105,95 +103,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object CosineSimilarity {
   val name = "graft_cosine"
 
-  private val info = new ExpressionInfo(classOf[CosineSimilarity].getName, name)
-
-  private val builder: Seq[Expression] => Expression = { children =>
+  private[expressions] val builder: Seq[Expression] => Expression = { children =>
     require(children.size == 2, s"$name expects 2 arguments")
     CosineSimilarity(children.head, children(1))
-  }
-
-  /** Direct session registration (idempotent) — for sessions created without
-    * `spark.sql.extensions`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
-
-/** Direct-session registration of EVERY graft native function — the
-  * programmatic twin of [[GraftExtensions]] for sessions created without
-  * `spark.sql.extensions` (notably [[graft.PostureSessions]] clones, whose
-  * fresh SessionState starts with an empty session registry: an operator
-  * frame built on a clone would otherwise fail to resolve a function some
-  * earlier call registered on the CALLER only — the q86 r15 lesson).
-  * Idempotent.
-  */
-object GraftFunctions {
-  def registerAll(spark: SparkSession): Unit = {
-    CosineSimilarity.register(spark)
-    TextSignatures.register(spark)
-    TextStats.register(spark)
-    VecPrimitives.register(spark)
-    LshBucket.register(spark)
-    TopKByScore.register(spark)
-    CollectSmallestK.register(spark)
-    SmallestKPairs.register(spark)
-    FunnelStage.register(spark)
-    GraftPii.register(spark)
-    OovStats.register(spark)
-    ArgMaxText.register(spark)
-    LatestBy.register(spark)
-    FastRound.register(spark)
-  }
-}
-
-/** `spark.sql.extensions=graft.expressions.GraftExtensions` installs the
-  * engine's native functions into every session of a deployment.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier(CosineSimilarity.name),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, CosineSimilarity.name),
-      { children: Seq[Expression] => CosineSimilarity(children.head, children(1)) }))
-    (TextSignatures.fns ++ TextStats.fns ++ VecPrimitives.fns).foreach { case (name, cls, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name), builder))
-    }
-    ext.injectFunction((FunctionIdentifier(LshBucket.name),
-      new ExpressionInfo(classOf[LshBucket].getName, LshBucket.name),
-      LshBucket.builder))
-    ext.injectFunction((FunctionIdentifier(TopKByScore.name),
-      new ExpressionInfo(classOf[TopKByScore].getName, TopKByScore.name),
-      TopKByScore.builder))
-    ext.injectFunction((FunctionIdentifier(CollectSmallestK.name),
-      new ExpressionInfo(classOf[CollectSmallestK].getName, CollectSmallestK.name),
-      CollectSmallestK.builder))
-    ext.injectFunction((FunctionIdentifier(SmallestKPairs.name),
-      new ExpressionInfo(classOf[SmallestKPairs].getName, SmallestKPairs.name),
-      SmallestKPairs.builder))
-    ext.injectFunction((FunctionIdentifier(PostingPairs.name),
-      new ExpressionInfo(classOf[PostingPairs].getName, PostingPairs.name),
-      PostingPairs.builder))
-    ext.injectFunction((FunctionIdentifier(FunnelStage.name),
-      new ExpressionInfo(classOf[FunnelStage].getName, FunnelStage.name),
-      FunnelStage.builder))
-    ext.injectFunction((FunctionIdentifier("graft_pii_scrub"),
-      new ExpressionInfo(classOf[PiiScrub].getName, "graft_pii_scrub"),
-      GraftPii.builder))
-    ext.injectFunction((FunctionIdentifier(OovStats.name),
-      new ExpressionInfo(classOf[OovStats].getName, OovStats.name),
-      OovStats.builder))
-    ext.injectFunction((FunctionIdentifier(ArgMaxText.name),
-      new ExpressionInfo(classOf[ArgMaxText].getName, ArgMaxText.name),
-      ArgMaxText.builder))
-    ext.injectFunction((FunctionIdentifier(LatestBy.name),
-      new ExpressionInfo(classOf[LatestBy].getName, LatestBy.name),
-      LatestBy.builder))
-    ext.injectFunction((FunctionIdentifier(FastRound.name),
-      new ExpressionInfo(classOf[RoundHalfUpFast].getName, FastRound.name),
-      { children: Seq[Expression] =>
-        require(children.size == 2, s"${FastRound.name} expects 2 arguments")
-        RoundHalfUpFast(children.head, children(1))
-      }))
   }
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, NullType}
 
@@ -16,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, NullType}
   * `BigDecimal.valueOf(x).setScale(s, HALF_UP).doubleValue()` per row —
   * `valueOf` is a `Double.toString` (shortest-decimal) plus a decimal
   * parse, ~µs-scale. On a 16M-row candidate stream (q129's search at the
-  * sf1 point) that is 75% of the wall (tools.RoundCostProbe: raw dot
+  * sf1 point) that is 75% of the wall (measured: raw dot
   * 1.9 s, +round 7.4 s).
   *
   * The fast path does the rounding in pure double arithmetic and defers to
@@ -90,13 +88,8 @@ object FastRound {
     if (res == 0.0) 0.0 else if (x < 0) -res else res
   }
 
-  private val info = new ExpressionInfo(classOf[RoundHalfUpFast].getName, name)
-
-  /** Direct session registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, { children: Seq[Expression] =>
-        require(children.size == 2, s"$name expects 2 arguments")
-        RoundHalfUpFast(children.head, children(1))
-      })
+  private[expressions] val builder: Seq[Expression] => Expression = { children =>
+    require(children.size == 2, s"$name expects 2 arguments")
+    RoundHalfUpFast(children.head, children(1))
+  }
 }

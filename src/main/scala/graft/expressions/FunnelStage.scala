@@ -2,13 +2,11 @@ package graft.expressions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Greedy ordered-funnel stage per group — the native form of q102's
   * `aggregate(sort_array(collect_list(struct(ts, tb, tp))), …)` fold
@@ -180,14 +178,8 @@ object FunnelStage {
     }
   }
 
-  private val info = new ExpressionInfo(classOf[FunnelStage].getName, name)
-
   private[expressions] val builder: Seq[Expression] => Expression = { c =>
     require(c.size == 3, s"$name expects (ts_us bigint, step_idx int, window_us bigint literal)")
     FunnelStage(c.head, c(1), c(2))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

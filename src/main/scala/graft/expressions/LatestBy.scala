@@ -2,10 +2,9 @@ package graft.expressions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, SparkSession}
@@ -182,18 +181,12 @@ object LatestBy {
     }
   }
 
-  private val info = new ExpressionInfo(classOf[LatestBy].getName, name)
-
   private[expressions] val builder: Seq[Expression] => Expression = { c =>
     require(c.size == 1, s"$name expects (struct(ts, seq, payload))")
     LatestBy(c.head)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-
   def latestByCol(spark: SparkSession)(tsSeqPayload: Column): Column = {
-    register(spark); call_function(name, tsSeqPayload)
+    GraftFunctions.registerAll(spark); call_function(name, tsSeqPayload)
   }
 }

@@ -1,12 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression: sign-random-projection LSH bucket id of a
   * float/double vector — bit `p` of the result is set iff the dot product
@@ -131,14 +129,8 @@ object LshBucket {
     Array.fill(nPlanes, dim)(rnd.nextGaussian())
   }
 
-  private val info = new ExpressionInfo(classOf[LshBucket].getName, name)
-
   private[expressions] val builder: Seq[Expression] => Expression = { c =>
     require(c.size == 4, s"$name expects (vec, nPlanes, dim, seed)")
     LshBucket(c(0), c(1), c(2), c(3))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

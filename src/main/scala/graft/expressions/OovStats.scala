@@ -1,13 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_oov_stats(text, vocab)` → STRUCT<n_tokens BIGINT, n_oov BIGINT>
@@ -94,14 +92,8 @@ object OovStats {
     InternalRow(n, oov)
   }
 
-  private val info = new ExpressionInfo(classOf[OovStats].getName, name)
-
   private[expressions] val builder: Seq[Expression] => Expression = { c =>
     require(c.size == 2, s"$name expects (text, vocab array)")
     OovStats(c.head, c(1))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

@@ -1,8 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -196,25 +195,20 @@ object GraftPii {
       emails.size().toLong, nIps, nPhones, UTF8String.fromString(clean)))
   }
 
-  /** Shared by [[register]] and the SparkSessionExtensions injection —
-    * wrong arity raises a clean analysis-time error instead of
+  val name = "graft_pii_scrub"
+
+  /** Wrong arity raises a clean analysis-time error instead of
     * `children.head` throwing NoSuchElementException on zero args or
     * silently ignoring extras (ADVICE r16).
     */
   private[expressions] val builder: Seq[Expression] => Expression = {
     case Seq(e) => PiiScrub(e)
     case c => throw new IllegalArgumentException(
-      s"graft_pii_scrub expects exactly 1 argument (text), got ${c.size}")
+      s"$name expects exactly 1 argument (text), got ${c.size}")
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_pii_scrub"),
-      new ExpressionInfo(classOf[PiiScrub].getName, "graft_pii_scrub"),
-      builder)
-
   def scrubCol(spark: SparkSession)(text: Column): Column = {
-    register(spark); call_function("graft_pii_scrub", text)
+    GraftFunctions.registerAll(spark); call_function(name, text)
   }
 }
 

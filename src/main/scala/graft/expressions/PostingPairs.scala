@@ -2,14 +2,12 @@ package graft.expressions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** All ascending (a < b positionally) pair combinations of a group's k
   * smallest BIGINT values, each packed into ONE long `(a << 32) | b` — the
@@ -154,14 +152,8 @@ object PostingPairs {
   /** Shared empty eval result — GenericArrayData is read-only downstream. */
   private val Empty = new GenericArrayData(Array.emptyLongArray)
 
-  private val info = new ExpressionInfo(classOf[PostingPairs].getName, name)
-
   private[expressions] val builder: Seq[Expression] => Expression = { c =>
     require(c.size == 2, s"$name expects (bigint, k)")
     PostingPairs(c.head, c(1))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

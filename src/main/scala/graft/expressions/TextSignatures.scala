@@ -1,8 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -151,7 +150,7 @@ object TextSignatures {
     * This replaces a `transform(sequence)/slice/concat_ws/array_distinct/
     * concat` composition whose per-gram higher-order-function eval was
     * measured as the dominant component of q123's sf1 wall
-    * (tools.DiversityProfile: +0.61 s of a 1.42 s total vs +0.01 s for
+    * (profiled: +0.61 s of a 1.42 s total vs +0.01 s for
     * the token explode alone).
     */
   def gramStream(text: UTF8String): ArrayData = {
@@ -198,7 +197,7 @@ object TextSignatures {
     * [[graft.operators.Curation.wordNgrams]]'s `transform(sequence)/slice/
     * concat_ws` composition, whose per-gram higher-order-function eval was
     * measured as the dominant component of BOTH q123's and q75's walls
-    * (tools.DiversityProfile / ContamProbe). Semantics mirror the composed
+    * (both profiled). Semantics mirror the composed
     * form EXACTLY (parity-spec pinned): tokens are `split(trim(text),
     * ' +')` — an empty/blank text yields the single empty token, matching
     * Spark's `split("")` — and the gram count is `greatest(m - n + 1, 1)`,
@@ -263,7 +262,7 @@ object TextSignatures {
     * same multiset as `explode(split(...)).groupBy(doc, token).count()` —
     * WITHOUT the corpus-wide token-major shuffle of raw occurrences that
     * aggregate needs (2.7M rows at the sf1 point collapse to 1.16M
-    * pre-counted pairs before anything shuffles; tools.TfidfProbe).
+    * pre-counted pairs before anything shuffles).
     */
   def tokenCounts(text: UTF8String): ArrayData = {
     val s = text.trim().toString
@@ -479,30 +478,24 @@ object TextSignatures {
       (c: Seq[Expression]) => WordBigrams(c.head)),
   )
 
-  /** Idempotent direct-session registration (mirrors CosineSimilarity). */
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, cls, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
-  }
-
   /** Column helpers (register on first use in the owning session). */
   def minhashBandsCol(spark: SparkSession)(text: Column, k: Int): Column = {
-    register(spark); call_function("graft_minhash_bands", text, lit(k))
+    GraftFunctions.registerAll(spark); call_function("graft_minhash_bands", text, lit(k))
   }
   def simhashCol(spark: SparkSession)(tokens: Column): Column = {
-    register(spark); call_function("graft_simhash", tokens)
+    GraftFunctions.registerAll(spark); call_function("graft_simhash", tokens)
   }
   def shingleJaccardCol(spark: SparkSession)(a: Column, b: Column, k: Int): Column = {
-    register(spark); call_function("graft_shingle_jaccard", a, b, lit(k))
+    GraftFunctions.registerAll(spark); call_function("graft_shingle_jaccard", a, b, lit(k))
   }
   def gramStreamCol(spark: SparkSession)(text: Column): Column = {
-    register(spark); call_function("graft_gram_stream", text)
+    GraftFunctions.registerAll(spark); call_function("graft_gram_stream", text)
   }
   def wordNgramsCol(spark: SparkSession)(text: Column, n: Int, distinct: Boolean): Column = {
-    register(spark); call_function("graft_word_ngrams", text, lit(n), lit(distinct))
+    GraftFunctions.registerAll(spark); call_function("graft_word_ngrams", text, lit(n), lit(distinct))
   }
   def tokenCountsCol(spark: SparkSession)(text: Column): Column = {
-    register(spark); call_function("graft_token_counts", text)
+    GraftFunctions.registerAll(spark); call_function("graft_token_counts", text)
   }
 
   private[expressions] def requireFoldableInt(e: Expression, name: String): TypeCheckResult =

@@ -1,8 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -171,7 +170,7 @@ object TextStats {
     *
     * r16: folds the raw UTF-8 bytes directly while they are ASCII (code
     * point == byte value — no per-row String allocation or char decode;
-    * `tools.FingerprintFoldAB` measures the byte path ~12% faster than the
+    * a same-window A/B measured the byte path ~12% faster than the
     * code-point loop over the sf1 corpus, values asserted equal per row).
     * The first non-ASCII byte restarts the row through the code-point
     * loop, so the value is bit-identical on any input (parity-spec pinned
@@ -212,22 +211,17 @@ object TextStats {
     ("graft_rep_stats", classOf[RepStatsExpr], (c: Seq[Expression]) => RepStatsExpr(c.head)),
   )
 
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, cls, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
-  }
-
   def statsCol(spark: SparkSession)(text: Column): Column = {
-    register(spark); call_function("graft_text_stats", text)
+    GraftFunctions.registerAll(spark); call_function("graft_text_stats", text)
   }
   def markerHitsCol(spark: SparkSession)(text: Column): Column = {
-    register(spark); call_function("graft_marker_hits", text)
+    GraftFunctions.registerAll(spark); call_function("graft_marker_hits", text)
   }
   def fingerprintCol(spark: SparkSession)(text: Column): Column = {
-    register(spark); call_function("graft_fingerprint", text)
+    GraftFunctions.registerAll(spark); call_function("graft_fingerprint", text)
   }
   def repStatsCol(spark: SparkSession)(text: Column): Column = {
-    register(spark); call_function("graft_rep_stats", text)
+    GraftFunctions.registerAll(spark); call_function("graft_rep_stats", text)
   }
 
   private[expressions] def requireString(e: Expression, name: String): TypeCheckResult =

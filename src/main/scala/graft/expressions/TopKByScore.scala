@@ -2,14 +2,12 @@ package graft.expressions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Bounded top-k as a distributive AGGREGATE (SURVEY §2.C: "partition-local
   * top-k then global merge" as a `TypedImperativeAggregate`): each partition
@@ -20,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * alternative shuffles and sorts EVERY scored row by group before
   * discarding all but k; here the shuffle payload is `groups × k` however
   * large the scored input is. Measured on the 16M-candidate IVF search at
-  * sf1 (IvfSearchProfile): this heap costs ~3.3 s over the pure-scoring
+  * sf1: this heap costs ~3.3 s over the pure-scoring
   * baseline, the rank-window formulation ~10 s — 2.3× worse even though
   * Spark 4 plans it with a partial WindowGroupLimit, because the partial
   * still SORTS every partition's full candidate stream while the heap
@@ -56,7 +54,7 @@ case class TopKByScore(child: Expression, kExpr: Expression,
   // Zero-allocation update path. TypedImperativeAggregate updates run
   // OUTSIDE whole-stage codegen, so the generic `child.eval(input)` pays a
   // GenericInternalRow + values array + two boxes PER INPUT ROW — measured
-  // at 16M candidate rows per IVF search (IvfSearchProfile), that
+  // at 16M candidate rows per IVF search, that
   // interpreter overhead, not the heap arithmetic, dominated the
   // aggregation. After binding, the common shapes of `child` are
   // `named_struct(_, BoundReference, _, BoundReference)` (casts folded) or
@@ -90,21 +88,11 @@ case class TopKByScore(child: Expression, kExpr: Expression,
                 if b.dataType == IntegerType => Array(b.ordinal, 4)
             case _ => null
           }
-          if (score != null && id != null) {
-            if (sys.env.contains("GRAFT_TOPK_DEBUG"))
-              System.err.println(s"TOPK-FASTPATH ords=${score.toSeq}/${id.toSeq}")
-            Array(score(0), score(1), id(0), id(1))
-          } else {
-            if (sys.env.contains("GRAFT_TOPK_DEBUG"))
-              System.err.println(s"TOPK-SLOWPATH child=$child")
-            null
-          }
+          if (score != null && id != null) Array(score(0), score(1), id(0), id(1))
+          else null
         case _ => null
       }
-    case other =>
-      if (sys.env.contains("GRAFT_TOPK_DEBUG"))
-        System.err.println(s"TOPK-SLOWPATH non-struct child=$other")
-      null
+    case _ => null
   }
 
   override def update(buf: TopKByScore.Heap, input: InternalRow): TopKByScore.Heap = {
@@ -259,14 +247,8 @@ object TopKByScore {
     }
   }
 
-  private val info = new ExpressionInfo(classOf[TopKByScore].getName, name)
-
   private[expressions] val builder: Seq[Expression] => Expression = { c =>
     require(c.size == 2, s"$name expects (struct(score, id), k)")
     TopKByScore(c.head, c(1))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

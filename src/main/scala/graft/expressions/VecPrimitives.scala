@@ -1,11 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Norm-factored cosine primitives: `graft_dot` (plain dot product) and
   * `graft_l2norm` (√Σx², same accumulation order as [[CosineSimilarity]]'s
@@ -206,7 +204,7 @@ object VecPrimitives {
   val normName = "graft_l2norm"
   val dotLongName = "graft_dot_long"
 
-  val fns: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+  private[expressions] val fns: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     (dotName, classOf[DotProduct], { children: Seq[Expression] =>
       require(children.size == 2, s"$dotName expects 2 arguments")
       DotProduct(children.head, children(1))
@@ -219,11 +217,4 @@ object VecPrimitives {
       require(children.size == 2, s"$dotLongName expects 2 arguments")
       DotProductLong(children.head, children(1))
     }))
-
-  /** Direct session registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    fns.foreach { case (name, cls, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
-    }
 }

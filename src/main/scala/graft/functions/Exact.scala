@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * `sum(decimal(18,2))` widens to decimal(28,2), which exceeds Spark's
   * compact-long decimal range and accumulates through java.math.BigDecimal —
   * measured 3.6× slower than the long-cents path at sf1 (6M rows:
-  * 0.92 s vs 0.25 s grouped, `tools.DecimalSumProbe`), with long-cents at
+  * 0.92 s vs 0.25 s grouped), with long-cents at
   * the plain-double-sum floor. Per row the conversion is pure double
   * arithmetic (`x·100 ± 0.5`, truncate) — codegen-friendly, no BigDecimal.
   *

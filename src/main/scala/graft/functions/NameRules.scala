@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** Column-name and description hygiene rules from the reference pipeline,
@@ -54,5 +55,6 @@ object NameRules {
     * are preferred in plans; the UDF exists to certify UDF registration.
     */
   def registerUdfs(spark: SparkSession): Unit =
-    spark.udf.register("clean_name", (s: String) => cleanPythonName(s))
+    if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("clean_name")))
+      spark.udf.register("clean_name", (s: String) => cleanPythonName(s))
 }

@@ -36,7 +36,7 @@ object VectorFunctions {
     * Registers the function in the owning session on first use.
     */
   def cosineNative(spark: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column = {
-    graft.expressions.CosineSimilarity.register(spark)
+    graft.expressions.GraftFunctions.registerAll(spark)
     call_function(graft.expressions.CosineSimilarity.name, a, b)
   }
 
@@ -47,11 +47,11 @@ object VectorFunctions {
     * index pay each vector's norm ONCE instead of per pair.
     */
   def dotNative(spark: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column = {
-    graft.expressions.VecPrimitives.register(spark)
+    graft.expressions.GraftFunctions.registerAll(spark)
     call_function(graft.expressions.VecPrimitives.dotName, a, b)
   }
   def normNative(spark: org.apache.spark.sql.SparkSession)(a: Column): Column = {
-    graft.expressions.VecPrimitives.register(spark)
+    graft.expressions.GraftFunctions.registerAll(spark)
     call_function(graft.expressions.VecPrimitives.normName, a)
   }
 
@@ -59,10 +59,10 @@ object VectorFunctions {
     * ~1000x cheaper per row ([[graft.expressions.FastRound]]) — use where a
     * candidate STREAM is rounded (ANN scoring, near-dup verify): Spark's
     * double Round is a per-row BigDecimal round-trip that dominated q129's
-    * search wall (tools.RoundCostProbe).
+    * search wall.
     */
   def roundNative(spark: org.apache.spark.sql.SparkSession)(c: Column, scale: Int): Column = {
-    graft.expressions.FastRound.register(spark)
+    graft.expressions.GraftFunctions.registerAll(spark)
     call_function(graft.expressions.FastRound.name, c, lit(scale))
   }
 

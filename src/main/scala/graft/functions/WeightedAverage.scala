@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
 
@@ -31,5 +32,6 @@ object WeightedAverage {
 
   /** Registers `weighted_avg(value DOUBLE, weight BIGINT)` for SQL use. */
   def register(spark: SparkSession): Unit =
-    spark.udf.register("weighted_avg", functions.udaf(Agg, Encoders.product[In]))
+    if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("weighted_avg")))
+      spark.udf.register("weighted_avg", functions.udaf(Agg, Encoders.product[In]))
 }

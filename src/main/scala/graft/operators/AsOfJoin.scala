@@ -93,7 +93,7 @@ object AsOfJoin {
       val e = Tables(s, dir).eventsUs
       // EVENTS-sized output through the as-of join's shuffled stages — the
       // fan-in rule in Present.presented derives the distributed range
-      // shape (r15; hand pin was SortModeProbe at sf1: 1.99 -> 1.59 s med
+      // shape (r15; hand pin was a two-mode A/B at sf1: 1.99 -> 1.59 s med
       // vs the single-partition presentation merge)
       selfAsOf(e, col("event_type") === "signup",
         "user_id", "ts_us", "value", "event_id")

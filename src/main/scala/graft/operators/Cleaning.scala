@@ -141,7 +141,7 @@ object Cleaning {
   private def docLines(docs: DataFrame, keyCol: String, textCol: String,
                        lineTokens: Int): DataFrame = {
     require(lineTokens > 0, s"lineTokens must be positive: $lineTokens")
-    graft.expressions.TextSignatures.register(docs.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(docs.sparkSession)
     docs
       .filter(TextAnalysis.wsTokenCount(col(textCol)) >= 1)
       .select(col(keyCol),

@@ -256,7 +256,7 @@ object Curation {
     // the transform/sequence/slice composition it replaces, parity-pinned)
     // — it also carries each window's token count, so the per-chunk
     // re-split that derived n_tokens is gone too.
-    graft.expressions.TextSignatures.register(docs.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(docs.sparkSession)
     docs.filter(TextAnalysis.wsTokenCount(col(textCol)) >= 1)
       .select(col(keyCol), posexplode(
         call_function("graft_word_chunks", col(textCol),

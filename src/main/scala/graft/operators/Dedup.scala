@@ -78,34 +78,25 @@ object Dedup {
     * (measured on q124: zero reused exchanges — the scan + signature
     * kernel ran once per consumer). An EAGER localCheckpoint collapses
     * them to one computation and wins (q124 med 0.647 → 0.452 s at sf0.1,
-    * CandidateCacheAB); a LAZY MEMORY_AND_DISK persist of the same frame
-    * LOSES (med 0.734 — columnar encode/decode of the payload plus the
-    * cache boundary's AQE restrictions cost more than the recomputes), so
-    * the checkpoint is the shipped form. An input-sized materialization
+    * Q124_CANDCACHE_AB.json); a LAZY MEMORY_AND_DISK persist of the same
+    * frame LOSES (med 0.734 — columnar encode/decode of the payload plus
+    * the cache boundary's AQE restrictions cost more than the recomputes),
+    * so the checkpoint is the shipped form. An input-sized materialization
     * is still exactly what a 100 TB run cannot hold (the q115
-    * containment-gram lesson), so AUTO materializes only when the
-    * SOURCE's at-rest size estimate is at or under
-    * `spark.graft.candidateMaterializeMaxBytes` (default 64 MB) and
-    * recomputes otherwise; `spark.graft.candidateInputMaterialize` forces
-    * NONE/FORCE explicitly. Gate stats come from the raw source scan
-    * (reliable file-size stats), never the derived frame (a join estimate
-    * without CBO is a size product — useless as a gate).
+    * containment-gram lesson), so it happens only when the SOURCE's
+    * at-rest size estimate is at or under [[CandidateMaterializeMaxBytes]],
+    * and the input recomputes otherwise.
+    * Gate stats come from the raw source scan (reliable file-size stats),
+    * never the derived frame (a join estimate without CBO is a size
+    * product — useless as a gate).
     */
   private def materializeCandidateInput(input: DataFrame,
-                                        source: DataFrame): DataFrame = {
-    val conf = input.sparkSession.conf
-    val doIt = conf.getOption("spark.graft.candidateInputMaterialize")
-      .getOrElse("AUTO") match {
-      case "NONE" => false
-      case "AUTO" =>
-        val atRest = source.queryExecution.optimizedPlan.stats.sizeInBytes
-        val gate = conf.getOption("spark.graft.candidateMaterializeMaxBytes")
-          .map(_.toLong).getOrElse(64L << 20)
-        atRest <= gate
-      case _ => true
-    }
-    if (doIt) input.localCheckpoint(true) else input
-  }
+                                        source: DataFrame): DataFrame =
+    if (source.queryExecution.optimizedPlan.stats.sizeInBytes <= CandidateMaterializeMaxBytes)
+      input.localCheckpoint(true)
+    else input
+
+  private val CandidateMaterializeMaxBytes = 64L << 20
 
   /** Within-bucket candidate pairs with a HOT-BUCKET bound. Buckets at or
     * under `maxBucket` pair exhaustively (`a < b`) exactly as before; an
@@ -364,7 +355,7 @@ object Dedup {
     // two writes with no data dependency. Submitting them concurrently
     // lets the cheap projection write back-fill the bucketed write's
     // shuffle/sort tail instead of queueing a whole job behind it; same
-    // again for the two appends below. Measured at sf0.1 (Q114Legs): the
+    // again for the two appends below. Measured at sf0.1 (OPTIMIZATION_r19.md): the
     // serial chain paid bands+texts+append as a straight sum.
     inParallel(
       () => minhashBandTable(corpus, keyCol, k).withColumnRenamed(keyCol, "old_id")
@@ -449,7 +440,7 @@ object Dedup {
     // round 14: the native one-pass graft_word_ngrams (distinct folded in)
     // replaces the transform/slice/concat_ws composition — the q123/q75
     // higher-order-function finding applied here too
-    // Storage posture is MEASURED, gated, and conf-overridable
+    // Storage posture is MEASURED and gated
     // (Q115_PERSIST_AB.json, r16): the gram cache is the dedup family's
     // only input-sized persist, and the sweep shows it is scale-LOCAL —
     // at the sf1-scale corpus (5.9 MB at rest) MEMORY_AND_DISK wins ~9%
@@ -460,38 +451,26 @@ object Dedup {
     // region, while recomputing the codegen'd ngram expression per
     // consumer rides the (page-cached) scan. AUTO therefore persists only
     // when the input's Catalyst size estimate is measurably small
-    // (default gate 16 MB at rest — between the measured win and loss
-    // points, conf `spark.graft.containmentPersistMaxBytes`), and
-    // otherwise recomputes — the posture a 100 TB run needs, arrived at
-    // without configuration. `spark.graft.containmentGramStorage` forces
-    // MEMORY_AND_DISK / DISK_ONLY / NONE explicitly.
+    // (gate 16 MB at rest — between the measured win and loss points),
+    // and otherwise recomputes — the posture a 100 TB run needs, arrived
+    // at without configuration.
     val g0 = spread(docs).filter(TextAnalysis.wsTokenCount(col("text")) >= n)
       .select(col(keyCol),
         graft.expressions.TextSignatures.wordNgramsCol(docs.sparkSession)(
           col("text"), n, distinct = true).as("g"))
-    val conf = docs.sparkSession.conf
-    val g = conf.getOption("spark.graft.containmentGramStorage").getOrElse("AUTO") match {
-      case "NONE" => g0
-      case "AUTO" =>
-        val atRest = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-        val gate = conf.getOption("spark.graft.containmentPersistMaxBytes")
-          .map(_.toLong).getOrElse(16L << 20)
-        // r19 (Q115GramStorageAB, honest per-run-clear protocol): the
-        // eager localCheckpoint beats the r16 MEMORY_AND_DISK persist on
-        // the gated small side too (med 1.996 -> 1.893, min 1.926 ->
-        // 1.705 at sf0.1) — no columnar encode/decode, no cache-boundary
-        // AQE restrictions. The 16 MB at-rest gate is unchanged: the r16
-        // 10x-decade loss (string-array inflation thrashing storage) is a
-        // property of materializing gram arrays at all, so the big side
-        // still recomputes.
-        if (atRest <= gate) g0.localCheckpoint(true)
-        else g0
-      case "LOCALCKPT" => g0.localCheckpoint(true) // explicit probe arm
-      case lvl => g0.persist(org.apache.spark.storage.StorageLevel.fromString(lvl))
-    }
+    // r19 (honest per-run-clear protocol, OPTIMIZATION_r19.md): the eager
+    // localCheckpoint beats the r16 MEMORY_AND_DISK persist on the gated
+    // small side too (med 1.996 -> 1.893, min 1.926 -> 1.705 at sf0.1) —
+    // no columnar encode/decode, no cache-boundary AQE restrictions. The
+    // 16 MB at-rest gate is unchanged: the r16 10x-decade loss
+    // (string-array inflation thrashing storage) is a property of
+    // materializing gram arrays at all, so the big side still recomputes.
+    val g =
+      if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <= (16L << 20)) g0.localCheckpoint(true)
+      else g0
     val ex = g.select(col(keyCol), explode(col("g")).as("sh"))
-    // r15 candidate-stage reshape, each step measured (Q115Legs /
-    // Q115_JOIN_AB.json / Q115_SHAPE_AB.json, rows asserted identical
+    // r15 candidate-stage reshape, each step measured
+    // (Q115_JOIN_AB.json / Q115_SHAPE_AB.json, rows asserted identical
     // throughout):
     //  - ONE shingle aggregate emits BOTH the document frequency and the
     //    capped posting list (graft_smallest_k bounded heap — map-side
@@ -515,8 +494,7 @@ object Dedup {
     // 3.56 s (3.22 s min) — chosen over the persist because a corpus ×
     // grams pair-stream cache is exactly what a 100 TB run cannot hold,
     // while this shape's only state is the vocabulary-sized aggregate.
-    graft.expressions.CollectSmallestK.register(docs.sparkSession)
-    graft.expressions.SmallestKPairs.register(docs.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(docs.sparkSession)
     val dfPost = ex.groupBy("sh")
       .agg(count(lit(1)).as("df"),
         expr(s"graft_smallest_k(${keyCol}, $maxBucket)").as("_bs"))
@@ -577,10 +555,10 @@ object Dedup {
   }
 
   /** The exploded 16-bit-chunk bucket table `(keyCol, simhash, chunk, cv)`
-    * behind [[simhashPairs]] — exposed for the bucket-population audit.
+    * behind [[simhashPairs]].
     */
-  private[graft] def simhashChunkTable(docs: DataFrame, keyCol: String,
-                                       textCol: String): DataFrame =
+  private def simhashChunkTable(docs: DataFrame, keyCol: String,
+                                textCol: String): DataFrame =
     withSimhash(spread(docs), textCol).select(col(keyCol), col("simhash"))
       .select(col(keyCol), col("simhash"),
         posexplode(expr(
@@ -852,7 +830,7 @@ object Dedup {
     // is join + aggregate + self-join over edge-list-sized data, and under
     // AQE each of those tiny stages materializes as its own Spark job — at
     // fixture scale that floor is the whole wall (13 jobs vs 5, 1.15 s vs
-    // 0.94 s at the sf1 point, ClusterRoundProbe). Past the threshold the
+    // 0.94 s at the sf1 point). Past the threshold the
     // per-round shuffles are real work and AQE's runtime re-planning (skew
     // split, coalesce) earns its stage jobs, so it stays on.
     //
@@ -947,7 +925,7 @@ object Dedup {
     */
   def resolveDuplicates(docs: DataFrame, pairs: DataFrame,
                         keyCol: String, textCol: String): DataFrame = {
-    // Scoring scope, MEASURED not assumed (ResolveShapeProbe, sf1,
+    // Scoring scope, MEASURED not assumed (OPTIMIZATION_r19.md, sf1,
     // interleaved min-of-5): a semi-join that pre-filters docs to the
     // clustered keys before the TextStats projection LOSES (1.37 s vs
     // 1.25 s) — the text scan dominates and is unavoidable either way

@@ -94,7 +94,7 @@ object Funnels {
     // ts in [0, 2^55)) are the expression's documented contract; this
     // operator's step list is always tiny.
     require(steps.size <= 255, "funnelStages: step list exceeds the packing bound")
-    graft.expressions.FunnelStage.register(events.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(events.sparkSession)
     val stepIdx = steps.zipWithIndex.foldLeft(lit(-1)) { case (acc, (s, i)) =>
       when(col(typeCol) === s, lit(i)).otherwise(acc)
     }

@@ -92,11 +92,11 @@ object MergeUpsert {
     * structs through one explode-of-array-literal pass — same rows (op
     * classes U/D are disjoint by construction; a key can be both D and I
     * — e.g. ≡0 mod 143 — exactly as the union emitted both). Measured
-    * alternated A/B (`ChangesetShapeAB`, row identity asserted): q90 med
+    * alternated A/B (`Q90_CHANGESET_AB.json`, row identity asserted): q90 med
     * 0.583 → 0.450 s, q107 med 0.918 → 0.604 s at sf0.1. Presentation-sort
     * modes are unchanged at every SF: [[merge]] localCheckpoints the
     * changeset, so the fan-in walk sees the checkpoint's RDD leaf (counts
-    * 0) on that side either way (SortRuleCalibrate re-checked: q90
+    * 0) on that side either way (re-checked in the same artifact: q90
     * fan=150k/single at sf0.1), and q107's delta sits below an Aggregate.
     */
   private[graft] def changeset(o: DataFrame): DataFrame = {

@@ -142,7 +142,7 @@ object Multimodal {
     * saturates once postings ≫ cells — at the sf1 point the 2048-cell run
     * emitted 805,901 "pairs" of which all but ~1,626 were bucket-collision
     * noise that ALSO dominated the wall (5M+ intermediate pairs, 2.5 s vs
-    * 0.8 s measured, `FrameDedupShapeProbe`). The accidental-collision pair
+    * 0.8 s measured). The accidental-collision pair
     * rate scales ~postings²/buckets, so at 100 TB the space must scale with
     * the corpus (or use the raw 64-bit fingerprint and drop the modulus);
     * the parameter stays for callers modeling genuinely small hash spaces.
@@ -205,7 +205,7 @@ object Multimodal {
     // list in an unspillable buffer. Packing contract (loud update-time
     // error, never silent): doc_id ∈ [0, 2^31) — wider id spaces must
     // densify first or compose the unpacked graft_smallest_k form.
-    graft.expressions.PostingPairs.register(meta.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(meta.sparkSession)
     fps.groupBy("fp")
       .agg(expr(s"graft_posting_pairs(doc_id, $maxPosting)").as("pp"))
       .select(explode(col("pp")).as("p"))

@@ -34,10 +34,9 @@ object Pipeline {
     * AND resolution scoring run over this id prefix (r19 pruned the
     * resolution leg to the bound — clusters can only contain bounded ids),
     * while the keep DECISION still covers the whole corpus via the
-    * broadcast left join below. `private[graft]` so probes (Q136Legs)
-    * measure the same bound the query ships with.
+    * broadcast left join below.
     */
-  private[graft] val PairBound = 40
+  private val PairBound = 40
 
   def curate(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession

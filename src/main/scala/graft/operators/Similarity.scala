@@ -98,7 +98,7 @@ object Similarity {
     // native fused integer dot (graft_dot_long): identical integers to the
     // aggregate(zip_with(...)) fold — exact associative arithmetic, no
     // rounding contract — without the per-element HOF lambda dispatch
-    graft.expressions.VecPrimitives.register(corpus.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(corpus.sparkSession)
     val scored = c.join(broadcast(q), col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
         call_function(graft.expressions.VecPrimitives.dotLongName,
@@ -112,7 +112,7 @@ object Similarity {
   private[graft] def topKPerGroup(scored: DataFrame, groupCol: String,
                                       scoreCol: String, idCol: String,
                                       k: Int): DataFrame = {
-    graft.expressions.TopKByScore.register(scored.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(scored.sparkSession)
     scored
       .groupBy(groupCol)
       .agg(call_function(graft.expressions.TopKByScore.name,
@@ -133,7 +133,7 @@ object Similarity {
     */
   def withLshBucket(df: DataFrame, vecCol: String, nPlanes: Int, dim: Int,
                     seed: Long = 42L): DataFrame = {
-    graft.expressions.LshBucket.register(df.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(df.sparkSession)
     df.withColumn("bucket", call_function(graft.expressions.LshBucket.name,
       col(vecCol), lit(nPlanes), lit(dim), lit(seed.toInt)))
   }
@@ -412,8 +412,8 @@ object Similarity {
     * which also removes the write→read dependency between the two index
     * halves so their writes can overlap (guide §2.6).
     */
-  private[graft] def ivfCellRowsFrom(spark: SparkSession, df: DataFrame, keyCol: String,
-                                     vecCol: String, cent: DataFrame): DataFrame = {
+  private def ivfCellRowsFrom(spark: SparkSession, df: DataFrame, keyCol: String,
+                              vecCol: String, cent: DataFrame): DataFrame = {
     val cos = VectorFunctions.cosineNative(spark) _
     val nrm = VectorFunctions.normNative(spark)(_)
     val rnd = VectorFunctions.roundNative(spark) _
@@ -549,58 +549,6 @@ object Similarity {
     ivfCellRows(spark, increment, keyCol, vecCol, centTbl)
       .write.mode("overwrite")
       .parquet(ivfSegmentBase(spark, tag).resolve(s"b$batchId").toString)
-  }
-
-  /** Diagnostic twin of [[searchIvfIndex]] truncated before the top-k —
-    * exposes the scored candidate stream so a profile can separate the
-    * per-pair scoring cost from the heap aggregation (IvfSearchProfile).
-    */
-  private[graft] def scoredPairsForProfile(spark: SparkSession, queries: DataFrame,
-                                           keyCol: String, vecCol: String,
-                                           tag: String, nprobe: Int = 4): DataFrame = {
-    val (centTbl, cellsTbl) = ivfArtifactNames(tag)
-    val cos = VectorFunctions.cosineNative(spark) _
-    val dot = VectorFunctions.dotNative(spark) _
-    val nrm = VectorFunctions.normNative(spark)(_)
-    val rnd = VectorFunctions.roundNative(spark) _
-    val cent = spark.table(centTbl)
-    val probes = topKPerGroup(
-      queries.select(col(keyCol).as("q_id"), col(vecCol))
-        .join(broadcast(cent))
-        .select(col("q_id"), col("cent_id"),
-          rnd(cos(col(vecCol), col("cvec")), 6).as("s")),
-      "q_id", "s", "cent_id", nprobe)
-      .select(col("q_id"), col("cent_id"))
-    probes
-      .join(queries.select(col(keyCol).as("q_id"), col(vecCol).as("qv"),
-        nrm(col(vecCol)).as("qn")), "q_id")
-      .join(spark.table(cellsTbl), "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id").as("n_id"),
-        rnd(dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("sim"))
-  }
-
-  /** Diagnostic: the candidate volume a [[searchIvfIndex]] at these
-    * parameters scores — the probe list expanded against the cells, before
-    * top-k. What the `SCALE_IVF.json` sweep records next to wall time.
-    */
-  def searchCandidateCount(spark: SparkSession, queries: DataFrame,
-                           keyCol: String, vecCol: String, tag: String,
-                           nprobe: Int = 4): Long = {
-    val (centTbl, cellsTbl) = ivfArtifactNames(tag)
-    val cos = VectorFunctions.cosineNative(spark) _
-    val rnd = VectorFunctions.roundNative(spark) _
-    val cent = spark.table(centTbl)
-    topKPerGroup(
-      queries.select(col(keyCol).as("q_id"), col(vecCol))
-        .join(broadcast(cent))
-        .select(col("q_id"), col("cent_id"),
-          rnd(cos(col(vecCol), col("cvec")), 6).as("s")),
-      "q_id", "s", "cent_id", nprobe)
-      .select(col("q_id"), col("cent_id"))
-      .join(spark.table(cellsTbl).select("cent_id", "c_id"), "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .count()
   }
 
   /** APPEND (corpus-grows): the increment's cell assignments enter the

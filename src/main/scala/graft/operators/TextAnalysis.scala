@@ -163,7 +163,7 @@ object TextAnalysis {
     // action: one DAG, one pass over the inputs per invocation.
     val n = docs.agg(count(lit(1)).cast("double").as("_n"))
     // df as an AGGREGATE + hint-free join, not a token window (round 14,
-    // TfidfTcAB same-window A/B: 1.32 → 0.93 s min at sf1): tf has one row
+    // same-window A/B, Q53_DECOMP.json: 1.32 → 0.93 s min at sf1): tf has one row
     // per (doc, token) so the per-token row count IS df, the aggregate's
     // map-side combine collapses the exchange to per-partition vocab, and
     // AQE picks the join side at runtime — broadcast at this corpus's
@@ -212,7 +212,7 @@ object TextAnalysis {
     // BIGRAM_NATIVE_AB.json). The >=2-token guard stays: it matches the
     // expression's no-pairs contract for short docs and keeps the plan's
     // scan shape unchanged.
-    graft.expressions.TextSignatures.register(docs.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(docs.sparkSession)
     docs.filter(wsTokenCount(col(textCol)) >= 2)
       .select(explode(call_function(
         "graft_word_bigrams", col(textCol))).as("_p"))
@@ -312,7 +312,7 @@ object TextAnalysis {
     // already knew. dl mirrors wsTokenCount exactly (blank text -> 0,
     // contributing to N and sum(dl) but no tf rows — same as before);
     // per-(doc, term) rows and values are identical (Bm25TermTfsAB).
-    graft.expressions.TextSignatures.register(docs.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(docs.sparkSession)
     val termsArr = array(terms.map(lit): _*)
     val toks = docs.select(col(keyCol),
       call_function("graft_term_tfs", col(textCol), termsArr).as("_tt"))
@@ -413,7 +413,7 @@ object TextAnalysis {
     // 'contains a space', which mis-filed a single-token doc's degenerate
     // spaceless bigram as a token occurrence — ADVICE r13 — and its
     // transform/slice/concat_ws/array_distinct composition was the measured
-    // bulk of the sf1 wall, tools.DiversityProfile). One (source, fam, gram)
+    // bulk of the sf1 wall). One (source, fam, gram)
     // hash aggregate with map-side combine dedups both gram families in a
     // single vocabulary-sized exchange, counting occurrences as it goes;
     // the sources-sized second aggregate reads totals, distincts AND the
@@ -515,7 +515,7 @@ object TextAnalysis {
       // through the native graft_oov_stats expression: no token explode,
       // no broadcast join, no doc-major re-aggregate (those three stages
       // were the whole probe branch; the r14 persist treatment measured
-      // neutral-to-worse — VocabOovShapeProbe — because the problem was
+      // neutral-to-worse because the problem was
       // the branch's shape, not its double scan). The DEPLOYMENT form
       // keeps the top-V vocab as a MAINTAINED artifact — the q119
       // pattern — and pays only [[vocabOovScoreLocal]] per increment;
@@ -542,7 +542,7 @@ object TextAnalysis {
     */
   def vocabOovScoreLocal(docs: DataFrame, keyCol: String, textCol: String,
                          terms: Seq[String]): DataFrame = {
-    graft.expressions.OovStats.register(docs.sparkSession)
+    graft.expressions.GraftFunctions.registerAll(docs.sparkSession)
     docs.select(col(keyCol),
         call_function("graft_oov_stats", col(textCol),
           array(terms.map(lit): _*)).as("_os"))

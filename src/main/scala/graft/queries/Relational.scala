@@ -173,7 +173,7 @@ object Relational {
   // B4: projection with scalar arithmetic. Output is TABLE-sized (every
   // orders row) — the fan-in rule in Present.presented derives the
   // distributed range-exchange shape from the un-reduced orders fan-in
-  // (r15; was a hand pin backed by SortModeProbe at sf1: 1.96 -> 1.56 s
+  // (r15; was a hand pin backed by a two-mode A/B at sf1: 1.96 -> 1.56 s
   // med — the same measurement now lives in SORT_THRESHOLD.json).
   private def q03Project: Q = (s, dir) =>
     Tables(s, dir).orders
@@ -194,7 +194,7 @@ object Relational {
       // sort every output column so the order is total and engine-portable.
       // The lineitem fan-in is un-reduced (filters don't lower the bound),
       // so the rule derives the distributed range shape (r15; hand pin was
-      // SortModeProbe r14: single 0.582 s med vs range 0.514 s).
+      // an r14 two-mode A/B: single 0.582 s med vs range 0.514 s).
       .presented("l_orderkey", "l_linenumber", "l_quantity")
   }
 
@@ -202,7 +202,7 @@ object Relational {
   // AQE may downgrade to broadcast at runtime when one side is small.
   // Output is orders-sized (1.5M rows at sf1) — the fan-in rule derives
   // the range shape from the join's larger side (r15; hand pin was
-  // SortModeProbe r14: range 0.786 s med vs single 1.278 s — the serial
+  // an r14 two-mode A/B: range 0.786 s med vs single 1.278 s — the serial
   // one-partition merge is the documented 100×-scale hazard too).
   private def q05JoinInner: Q = (s, dir) => {
     val t = Tables(s, dir)
@@ -222,7 +222,7 @@ object Relational {
   // B8: left outer join. FACT-sized output (one row per order) — the
   // fan-in rule derives the range shape, and the join's materialized
   // shuffle stages make the range sampling pass cheap (r15; hand pin was
-  // SortModeProbe at sf1: 2.55 -> 2.28 s med).
+  // a two-mode A/B at sf1: 2.55 -> 2.28 s med).
   // Join strategy (r15): LEFT OUTER preserves customer, so only the
   // ORDERS side can build — under the broadcast threshold Catalyst
   // broadcasts the FACT and probes the single-split customer scan, so the
@@ -244,8 +244,8 @@ object Relational {
       .presented("c_custkey", "ok")
   }
 
-  // B9: left semi join (EXISTS). Shape (round 12, probed by
-  // tools.SemiJoinProbe at the sf1 point): DISTINCT the fact-side keys
+  // B9: left semi join (EXISTS). Shape (round 12, measured
+  // at the sf1 point): DISTINCT the fact-side keys
   // first — a distributed partial aggregate collapses the orders keys to
   // customer cardinality before any join machinery sees them — then
   // shuffle-hash join. The raw shape let the planner broadcast the full
@@ -444,7 +444,7 @@ object Relational {
 
   // B19: analytic lag over event time. EVENTS-sized output through an
   // already-shuffled window child — the fan-in rule derives the range
-  // shape (r15; hand pin was SortModeProbe at sf1: 1.29 -> 1.09 s med).
+  // shape (r15; hand pin was a two-mode A/B at sf1: 1.29 -> 1.09 s med).
   private def q18WindowLag: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     Tables(s, dir).eventsUs
@@ -454,7 +454,7 @@ object Relational {
 
   // B20: explicit frame spec — 3-row moving average, decimal-exact.
   // EVENTS-sized output — same derived range shape as q18
-  // (r15; hand pin was SortModeProbe at sf1: 1.33 -> 1.13 s med).
+  // (r15; hand pin was a two-mode A/B at sf1: 1.33 -> 1.13 s med).
   private def q19WindowFrame: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
       .rowsBetween(-2, Window.currentRow)
@@ -627,7 +627,7 @@ object Relational {
   // exchanges of the fact); the equivalent unbounded window computes the
   // per-key scalar in the SAME exchange the probe rows ride — one fact
   // shuffle + a per-partition sort instead of two fact shuffles + a join.
-  // Measured 2.5× faster at sf1 (CorrSubqShapeProbe: 0.86 → 0.35 s
+  // Measured 2.5× faster at sf1 (0.86 → 0.35 s
   // min-of-5, identical rows), and exchange volume is the scarcer
   // resource at 100 TB.
   private def q39CorrelatedSubquery: Q = (s, dir) => {
@@ -777,7 +777,7 @@ object Relational {
        WHERE n.next1 IS NOT NULL AND c.pos + 1 <= 4"""
 
   private def q81RecursiveCte: Q = (s, dir) => {
-    // LOOP POSTURE (round 14, the q85 playbook applied — Q81ShapeProbe
+    // LOOP POSTURE (round 14, the q85 playbook applied — measured
     // end-to-end at sf1, min-of-5 fresh plans): the recursion's
     // per-iteration working set is frontier-sized (one row per live chain),
     // so at small edge volumes the wall is per-iteration machinery, not
@@ -817,7 +817,7 @@ object Relational {
     // view handoff drops sort metadata, so the caller's orderBy still
     // plans an exchange+sort, but over already-range-partitioned sorted
     // runs it is a near-no-op merge (TimSort on sorted input) — measured
-    // faster than handing off unsorted (QueryProbe min 2.00 vs 2.55 s).
+    // faster than handing off unsorted (min 2.00 vs 2.55 s).
     if (!small) chain.orderBy("o_custkey", "pos")
     else {
       val done = chain.orderBy("o_custkey", "pos").localCheckpoint(true)

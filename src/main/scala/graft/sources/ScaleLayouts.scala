@@ -116,7 +116,7 @@ object ScaleLayouts {
     // xxhash64, not the 32-bit murmur `hash`: the hash stands in for row
     // equality, and at billions of changed rows a 2^-32 per-row collision
     // silently marks real changes unchanged; 2^-64 does not.
-    // Shape choice, MEASURED not assumed (SnapDiffShapeProbe, sf1,
+    // Shape choice, MEASURED not assumed (same-window A/B, sf1,
     // interleaved 5-rep medians): the full-outer join of the two sides
     // beats a tag-union + single hash aggregate 1.36 s vs 1.91 s. The
     // union folds both exchanges into one, but keys are ~unique within a
@@ -374,8 +374,8 @@ object ScaleLayouts {
       // by contract (unchanged rows are filtered before the result leaves
       // the join — scaladoc at snapshotDiff), which the fan-in rule's
       // upper bound cannot see through the full-outer join (it reads the
-      // 3M-row snapshot leaves). Measured two-mode at sf1 (SortModeProbe
-      // r15): single 0.90 s vs range 1.19 s.
+      // 3M-row snapshot leaves). Measured two-mode at sf1 (r15
+      // A/B): single 0.90 s vs range 1.19 s.
       snapshotDiff(s, root.toString, LocalDate.of(2026, 1, 1),
           LocalDate.of(2026, 1, 2), Seq("o_orderkey"))
         .presentedResultSized("o_orderkey")

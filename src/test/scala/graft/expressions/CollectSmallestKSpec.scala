@@ -13,7 +13,7 @@ class CollectSmallestKSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def parity(rows: Seq[(Long, Long)], k: Int): Unit = {
-    CollectSmallestK.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = rows.toDF("g", "v")
     val got = df.groupBy("g").agg(expr(s"graft_smallest_k(v, $k)").as("ds"))
       .orderBy("g").collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
@@ -32,7 +32,7 @@ class CollectSmallestKSpec extends AnyFunSuite {
   }
 
   test("cap binds: flooded group keeps exactly the k smallest") {
-    CollectSmallestK.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = (1L to 10000L).map(v => (1L, 10001L - v)).toDF("g", "v")
     val ds = df.groupBy("g").agg(expr("graft_smallest_k(v, 5)").as("ds"))
       .collect()(0).getSeq[Long](1)
@@ -40,7 +40,7 @@ class CollectSmallestKSpec extends AnyFunSuite {
   }
 
   test("under-full group returns all values ascending; nulls skipped") {
-    CollectSmallestK.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = Seq[(Long, java.lang.Long)]((1L, 5L), (1L, null), (1L, 2L))
       .toDF("g", "v")
     val ds = df.groupBy("g").agg(expr("graft_smallest_k(v, 100)").as("ds"))

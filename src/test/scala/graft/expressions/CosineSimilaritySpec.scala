@@ -27,7 +27,7 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("SQL registration: usable from spark.sql text") {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val out = spark.sql(
       "SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c")
       .collect().head.getDouble(0)
@@ -35,7 +35,7 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("null in, null out") {
-    CosineSimilarity.register(spark)
+    GraftFunctions.registerAll(spark)
     val r = spark.sql("SELECT graft_cosine(NULL, array(CAST(1.0 AS FLOAT))) AS c").collect().head
     assert(r.isNullAt(0))
   }

@@ -42,7 +42,7 @@ class FastRoundSpec extends AnyFunSuite {
   }
 
   test("expression parity with functions.round inside a plan") {
-    FastRound.register(spark)
+    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val xs = Seq.fill(20000)(rnd.nextDouble() * 2 - 1) ++

@@ -30,4 +30,23 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(row.getSeq[Long](5).size == 8)
     assert(row.getAs[Double]("sj") == 1.0)
   }
+
+  test("every function in the one table resolves on the suite session and on a posture clone") {
+    val names = GraftFunctions.all.map(_._1)
+    assert(names.distinct.size == names.size,
+      s"duplicate names: ${names.diff(names.distinct).mkString(", ")}")
+    val clone = graft.PostureSessions(spark, Map("spark.sql.shuffle.partitions" -> "3"))
+    for (s <- Seq(spark, clone); n <- names)
+      assert(s.catalog.functionExists(n), s"$n does not resolve")
+  }
+
+  test("registerAll installs every function in the table on a session that lacks them") {
+    val s2 = spark.newSession()
+    val registry = s2.sessionState.functionRegistry
+    val ids = GraftFunctions.all.map(f => org.apache.spark.sql.catalyst.FunctionIdentifier(f._1))
+    ids.foreach(registry.dropFunction)
+    assert(ids.forall(!registry.functionExists(_)))
+    GraftFunctions.registerAll(s2)
+    for (id <- ids) assert(s2.catalog.functionExists(id.funcName), s"${id.funcName} does not resolve")
+  }
 }

@@ -20,7 +20,7 @@ class PostingPairsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def hofPairs(rows: Seq[(Long, Long)], k: Int): Seq[(Long, Seq[Long])] = {
-    CollectSmallestK.register(spark)
+    GraftFunctions.registerAll(spark)
     rows.toDF("g", "v").groupBy("g")
       .agg(expr(s"graft_smallest_k(v, $k)").as("ds"))
       .select(col("g"), expr(
@@ -31,7 +31,7 @@ class PostingPairsSpec extends AnyFunSuite {
   }
 
   private def fusedPairs(rows: Seq[(Long, Long)], k: Int): Seq[(Long, Seq[Long])] = {
-    PostingPairs.register(spark)
+    GraftFunctions.registerAll(spark)
     rows.toDF("g", "v").groupBy("g")
       .agg(expr(s"graft_posting_pairs(v, $k)").as("pp"))
       .orderBy("g").collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
@@ -46,7 +46,7 @@ class PostingPairsSpec extends AnyFunSuite {
   }
 
   test("singleton and empty-after-null groups emit empty arrays (the old size filter)") {
-    PostingPairs.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = Seq[(Long, java.lang.Long)]((1L, 5L), (2L, 3L), (2L, null), (3L, null))
       .toDF("g", "v")
     val out = df.groupBy("g").agg(expr("graft_posting_pairs(v, 4)").as("pp"))
@@ -55,7 +55,7 @@ class PostingPairsSpec extends AnyFunSuite {
   }
 
   test("flood cap: saturated group emits C(k,2) pairs of the k smallest") {
-    PostingPairs.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = (1L to 1000L).map(v => (1L, 1001L - v)).toDF("g", "v")
     val pp = df.groupBy("g").agg(expr("graft_posting_pairs(v, 4)").as("pp"))
       .collect()(0).getSeq[Long](1)
@@ -64,7 +64,7 @@ class PostingPairsSpec extends AnyFunSuite {
   }
 
   test("packing bound: out-of-range value fails loudly, never silently") {
-    PostingPairs.register(spark)
+    GraftFunctions.registerAll(spark)
     val bad = Seq((1L, 1L << 31), (1L, 2L)).toDF("g", "v")
       .groupBy("g").agg(expr("graft_posting_pairs(v, 4)").as("pp"))
     val e = intercept[Exception] { bad.collect() }
@@ -74,7 +74,7 @@ class PostingPairsSpec extends AnyFunSuite {
   }
 
   test("unpack roundtrip matches the q134 presentation split") {
-    PostingPairs.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = Seq((1L, 7L), (1L, 2147483647L), (1L, 0L)).toDF("g", "v")
       .groupBy("g").agg(expr("graft_posting_pairs(v, 4)").as("pp"))
       .select(explode(col("pp")).as("p"))
@@ -85,7 +85,7 @@ class PostingPairsSpec extends AnyFunSuite {
   }
 
   test("degenerate k literals fail at analysis, never silently empty (ADVICE r17)") {
-    PostingPairs.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = Seq((1L, 1L), (1L, 2L)).toDF("g", "v")
     for (badK <- Seq("0", "-1", "1", "CAST(NULL AS INT)")) {
       val e = intercept[Exception] {

@@ -9,7 +9,7 @@ class TopKByScoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def topk(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    TopKByScore.register(spark)
+    GraftFunctions.registerAll(spark)
     df.groupBy("g")
       .agg(call_function(TopKByScore.name,
         struct(col("s").cast("double"), col("id").cast("long")), lit(k)).as("t"))
@@ -57,7 +57,7 @@ class TopKByScoreSpec extends AnyFunSuite {
   test("every update path agrees: primitive fast paths (double/long/int/float score, int id) and the generic-eval fallback") {
     val s = spark
     import s.implicits._
-    TopKByScore.register(spark)
+    GraftFunctions.registerAll(spark)
     val rows = (0 until 200).map(i => ((i % 5).toLong, i * 7 % 113, i))
     val expected = rows.groupBy(_._1).map { case (g, rs) =>
       g -> rs.map(r => (r._2.toDouble, r._3.toLong))

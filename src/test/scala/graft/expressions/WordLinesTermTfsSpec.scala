@@ -29,7 +29,7 @@ class WordLinesTermTfsSpec extends AnyFunSuite {
   )
 
   test("graft_word_lines ≡ the transform/sequence/slice/array_join composition") {
-    TextSignatures.register(spark)
+    GraftFunctions.registerAll(spark)
     for (n <- Seq(1, 2, 4, 7)) {
       val df = docs.toDF("text")
         .withColumn("_t", split(trim(col("text")), " +"))
@@ -45,7 +45,7 @@ class WordLinesTermTfsSpec extends AnyFunSuite {
   }
 
   test("graft_word_bigrams ≡ the transform/sequence pair composition under the >=2-token guard") {
-    TextSignatures.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = docs.toDF("text")
       .filter(graft.operators.TextAnalysis.wsTokenCount(col("text")) >= 2)
       .withColumn("_t", split(trim(col("text")), " +"))
@@ -67,7 +67,7 @@ class WordLinesTermTfsSpec extends AnyFunSuite {
   }
 
   test("graft_word_chunks ≡ the strided composition + per-chunk re-split count") {
-    TextSignatures.register(spark)
+    GraftFunctions.registerAll(spark)
     for ((c, n) <- Seq((4, 2), (4, 4), (3, 1), (7, 3))) {
       val df = docs.filter(_.trim.nonEmpty).toDF("text")
         .withColumn("_t", split(trim(col("text")), " +"))
@@ -87,7 +87,7 @@ class WordLinesTermTfsSpec extends AnyFunSuite {
   }
 
   test("graft_term_tfs ≡ wsTokenCount + explode/isin/count per term") {
-    TextSignatures.register(spark)
+    GraftFunctions.registerAll(spark)
     val terms = Seq("dup", "the", "four", "b")
     val df = docs.zipWithIndex.map(_.swap).toDF("id", "text")
     val native = df.selectExpr(
@@ -111,7 +111,7 @@ class WordLinesTermTfsSpec extends AnyFunSuite {
   }
 
   test("graft_term_tfs dl matches wsTokenCount on every fixture doc incl. blanks") {
-    TextSignatures.register(spark)
+    GraftFunctions.registerAll(spark)
     val df = docs.toDF("text")
     val got = df.selectExpr("graft_term_tfs(text, array('zzz')).dl AS dl")
       .collect().map(_.getLong(0)).toSeq

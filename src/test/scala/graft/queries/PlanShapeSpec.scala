@@ -93,7 +93,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // per-query hand pins (r14 verdict Missing #4): range sort iff the
     // plan's un-reduced fan-in rows (parquet-footer leaf counts, filters
     // deliberately not reducing) exceed Present.RangeSortRows — measured
-    // calibration in SORT_THRESHOLD.json (SortModeProbe r15 at sf1:
+    // calibration in SORT_THRESHOLD.json (r15 two-mode A/B at sf1:
     // q10 merged 13.1 s vs ranged 2.3 s is the wrong-way catastrophe the
     // rule exists to prevent; a needless range sort costs one flat
     // sampling job). At THIS test SF every fixture is far below the

@@ -129,7 +129,16 @@ class GoldenReplaySpec extends AnyFunSuite {
     ))
   }
 
+  /** The golden fixtures are not part of this repository; a missing
+    * directory fails the case by name instead of surfacing as an NPE from
+    * `File.list()` or a `NoSuchFileException` deep inside the replay.
+    */
+  private def requireFixtureDir(dir: String): Unit =
+    if (!Files.isDirectory(Paths.get(dir)))
+      fail(s"reference golden fixture directory $dir is missing")
+
   private def runAndCompare(d: GoldenDataset): Unit = {
+    requireFixtureDir(d.dir)
     val root = Files.createTempDirectory(s"graft_golden_${d.id}").toString
     val ingest = new StatlineIngest(spark, buildReplay(d), d.source)
     val res = ingest.run(d.id, root, thirdParty = d.thirdParty,
@@ -189,6 +198,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     // exercises the v4 pagination + empty-table path against the real
     // metadata (TZ-offset Modified, ObservationCount) and real dim tables.
     val dir = "/root/reference/tests/data/83765NED"
+    requireFixtureDir(dir)
     val id = "83765NED"
     val base = ODataUrls.v4Base(id)
     val tables = Seq("MeasureCodes", "MeasureGroups", "Dimensions",

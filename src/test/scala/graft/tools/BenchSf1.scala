@@ -9,7 +9,7 @@ import graft.SparkEntry
 
 /** Dev tool: the sf1-scale ratio point over the FULL query suite.
   * Densifies the sf0.1 fixtures ×10 under `/tmp/graft_sf1` (disjoint keys
-  * per copy — the `Scale100Probe` recipe; documents use the
+  * per copy; documents use the
   * substitution-cipher copies so duplicate-class structure stays constant;
   * embeddings get disjoint vec_ids per copy since round 11) and benches
   * EVERY declared query with the exact `graft.Bench` methodology (fresh

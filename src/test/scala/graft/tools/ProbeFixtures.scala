@@ -3,9 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared scale-probe fixture builders ([[Scale100Probe]],
-  * [[IncrementalDedupProbe]]).
-  */
+/** Scale fixture builders for [[BenchSf1]]'s densified corpus. */
 object ProbeFixtures {
 
   /** `mult` disjoint copies of the sf0.1 documents, de-correlated by a
@@ -14,10 +12,8 @@ object ProbeFixtures {
     * character-shingle space, so within-copy Jaccard — and the planted
     * near-dup structure — is preserved EXACTLY, while cross-copy shingles
     * share nothing; duplicate-cluster size stays constant as the corpus
-    * grows, which is the regime the linearity claims are about. (See
-    * [[Scale100Probe]]'s scaladoc for the two salting designs that instead
-    * measured their own artifacts.) Copy 0 is the identity cipher: the
-    * original sf0.1 texts under shifted ids.
+    * grows, which is the regime the linearity claims are about. Copy 0 is
+    * the identity cipher: the original sf0.1 texts under shifted ids.
     */
   def cipheredDocs(spark: SparkSession, mult: Int): DataFrame = {
     def rot(s: String, by: Int) = s.drop(by % s.length) + s.take(by % s.length)

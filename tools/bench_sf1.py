@@ -477,7 +477,7 @@ def main():
         "q110_pmi_collocations": "BIGRAM_NATIVE_AB.json",
         "q117_boilerplate_strip": "Q117_PERSIST_AB.json",
         "q81_recursive_cte": "Q81_STRIDE_AB.json",
-        "q87_snapshot_diff": "tools.SnapDiffShapeProbe (measured join-vs-union shape, ScaleLayouts.scala scaladoc)",
+        "q87_snapshot_diff": "measured join-vs-union shape (ScaleLayouts.scala scaladoc)",
         # r17: floor-boundary churners whose previously committed wall sat
         # 1-14 ms ABOVE the 0.45 s gate because the baseline artifact was
         # the round's deliberately committed hot window - adjudicated with
