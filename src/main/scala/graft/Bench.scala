@@ -1,273 +1,60 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: one JSON line with per-query steady-state latency.
   *
-  * Per query: one untimed warmup (JVM/codegen/JIT costs a long-lived
-  * cluster amortizes away), then the MIN of 3 timed fresh-plan collect()
-  * runs — see the inline notes and README "Bench methodology" for why
+  * There is one capture protocol, the interleaved Spark/DuckDB A/B
+  * (`tools/bench_ab.py`): it launches this main in serve mode next to one
+  * DuckDB connection and alternates the engines within each query block
+  * (one warmup each, then 3 fresh-plan `collect()` samples each; the
+  * committed value is the min), so every window certifies its own
+  * per-query spreads. A plain run of this main dumps the oracle SQL, runs
+  * that orchestrator — which writes `bench_out.json`, `BENCH_AB.json`,
+  * `DUCKDB_BASELINE.json`, `BENCH_DELTA.json` (with the `STREAM_BUDGET.json`
+  * check) and the README ratio table — and re-emits `bench_out.json` as the
+  * compact stdout line. If the orchestrator cannot run (no python3, no
+  * duckdb module, a nonzero exit), the run fails naming the cause and
+  * writes nothing. See README "Bench methodology" for why
   * fresh+collect+min is the honest measurement on this host.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Round 13: the interleaved A/B protocol is the ONLY capture mode when
-    // its prerequisites exist. A plain single-engine pass carries no
-    // same-window noise information, and twice (r11, r12) its cross-window
-    // flags needed judge archaeology to separate host drift from
-    // regression; delegating every normal bench run to `tools/bench_ab.py`
-    // (which drives THIS main in serve mode next to one DuckDB connection)
-    // means every window — builder's or driver's — certifies its own
-    // spreads. SPARK_GRAFT_BENCH_NO_AB=1 keeps the legacy in-JVM pass for
-    // debugging; serve mode and missing python/duckdb fall through to it.
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_SERVE") &&
-        !sys.env.contains("SPARK_GRAFT_BENCH_NO_AB") &&
-        delegateToInterleavedAb(sfDir)) return
-    val spark = SparkEntry.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        // Shuffle/spill scratch on tmpfs when the host has one: the bench
-        // measures operator latency, not the local disk's fsync jitter.
-        .config("spark.local.dir", graft.streaming.EventStreams.scratchBase)
-        // Same posture for the session warehouse (r19): the certification
-        // queries rebuild their managed artifacts (q114 band/text tables,
-        // q129/q137 IVF halves, q89 bucket tables, q90 snapshot versions)
-        // from the parquet inputs on EVERY call, so the warehouse holds
-        // throwaway derived data and its local-disk fsync latency is
-        // measurement noise, not operator cost — a deployment's warehouse
-        // is a distributed store whose write bandwidth this host cannot
-        // emulate either way. Parameterised: SPARK_GRAFT_WAREHOUSE
-        // overrides (e.g. to point a durability test at real disk).
-        // Measured (med-of-7, both orders): q89 0.35->0.18 s,
-        // q114 2.69->2.16 s best-window, q137 1.72->1.65 s, q90/q129
-        // neutral-to-better.
-        .config("spark.sql.warehouse.dir",
-          sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-            graft.StageDir.scratchBase + "/graft_warehouse"))
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Interleaved A/B server mode (round 12): `tools/bench_ab.py` drives this
-    // JVM query-by-query over stdin/stdout while timing the SAME query's
-    // DuckDB oracle in between Spark samples, so both engines sample one
-    // interference window and the committed pair carries its own per-query
-    // noise band (min + spread) — the self-certification the round-10/11
-    // window-drift episodes needed. The serve loop reuses this session and
-    // leaves all artifact writing to the orchestrator.
-    if (sys.env.contains("SPARK_GRAFT_BENCH_SERVE")) {
-      serve(spark, sfDir)
-      spark.stop()
-      return
+    if (sys.env.contains("SPARK_GRAFT_BENCH_SERVE")) serve(sfDir)
+    else capture(sfDir).foreach { cause =>
+      System.err.println(s"BENCH: $cause; no capture, no artifact written")
+      sys.exit(1)
     }
-    // Each timed run builds a FRESH plan and collects the result rows — the
-    // same work the DuckDB oracle pays per query (plan + execute + fetch).
-    // No plan cache here: re-executing a cached AQE plan reuses materialized
-    // shuffle stages and would report final-stage-only latency. `collect`,
-    // not `count`: count() rewraps the query in a new aggregate plan (often
-    // costlier than the query itself at this scale) and lets Catalyst drop
-    // the result-shaping work a real client consumes. (One declared
-    // exception: ANN index halves — IVF centroids + inverted lists — are
-    // built once per corpus and amortized across runs, the way an ANN index
-    // is meant to be used; everything else re-executes fully.)
-    def runOnce(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).collect() } catch {
-        case e: Throwable => // surface the first failure, don't just emit -1.0
-          System.err.println(s"BENCHFAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val results = SparkEntry.freshQueries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      runOnce(name, fn) // warmup: codegen + JIT + file-footer caches
-      // MIN of 3 timed runs: this host is a shared VM where random queries
-      // see 2-10x multi-second interference spikes run-to-run; the least-
-      // interfered run is the engine's actual cost. Nothing carries over
-      // between runs that would flatter min: every run builds a fresh plan
-      // and executes the full pipeline.
-      val ts = Seq(runOnce(name, fn), runOnce(name, fn), runOnce(name, fn))
-      if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
-        System.err.println(f"BENCHDBG $name%-32s ${ts.map(t => f"$t%.3f").mkString(" ")} @${System.currentTimeMillis() / 1000 % 10000}")
-      // JMH-style hygiene between queries (untimed): collect the previous
-      // query's garbage now, instead of as a pause inside the next query's
-      // timed run - without this the tail of the suite measures the head's
-      // allocation debt. Also drop cached data the finished query pinned
-      // (q115's gram table, the boilerplate dictionaries, the mixture rate
-      // tables, IVF index halves): each fresh plan persists a NEW copy, so
-      // without this the suite accumulates one pinned cache per run per
-      // caching query. Safe for the deliberately-cached ANN index: its
-      // reuse window is the query's own warmup+timed runs, all of which
-      // complete before this point.
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Exception => () }
-      System.gc()
-      // min over the SUCCESSFUL runs: a transient failure (-1.0) must
-      // surface as the failure marker only when every run failed, not
-      // poison the min (and flatter the total) when two runs succeeded.
-      val ok = ts.filter(_ >= 0)
-      name -> (if (ok.nonEmpty) ok.min else -1.0)
-    }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // ex-q74 headline alongside the total: DuckDB's q74 oracle is a
-    // pathological sequential recursive-CTE walk (~37 s of its suite), so a
-    // suite-total comparison hides the per-query picture; both totals are
-    // first-class in the artifact.
-    val q74 = results.collectFirst { case (n, v) if n.startsWith("q74") && v > 0 => v }
-      .getOrElse(0.0)
-    val exQ74 = total - q74
-    // Committed same-window DuckDB pair (tools/bench_duckdb.py writes it):
-    // embedded so the round artifact alone carries the comparison.
-    def r3(d: Double) = math.rint(d * 1000) / 1000
-    val duckdbVals: Map[String, Double] = {
-      val p = java.nio.file.Paths.get("DUCKDB_BASELINE.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(p.toFile)
-        import scala.jdk.CollectionConverters._
-        node.get("queries").fields().asScala
-          .map(e => e.getKey -> e.getValue.asDouble()).toMap
-      } catch { case _: Exception => Map.empty }
-    }
-    val duckdb =
-      if (duckdbVals.isEmpty) ""
-      else {
-        val dt = duckdbVals.values.sum
-        val dq74 = duckdbVals.collectFirst { case (n, v) if n.startsWith("q74") => v }.getOrElse(0.0)
-        s""","duckdb_committed":{"total":${r3(dt)},"total_ex_q74":${r3(dt - dq74)}}"""
-      }
-    // Both engines' FULL per-query maps belong in the complete artifact
-    // (bench_out.json) — the stdout line carries only the spark map plus
-    // DuckDB totals, because the driver keeps a bounded tail of stdout and
-    // two 112-entry maps would overflow it.
-    val duckdbFull =
-      if (duckdbVals.isEmpty) ""
-      else s""","duckdb_queries":${duckdbVals.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")}"""
-    // Committed per-replay streaming wall budgets (round 12): the 16
-    // streaming replays have no DuckDB analog, so nothing bounded them
-    // round-over-round; STREAM_BUDGET.json carries per-query ceilings
-    // (1.5× the max wall observed across the r10/r11 capture windows) and
-    // every bench run at the budget's SF checks them mechanically.
-    // (full, compact): bench_out.json carries the {wall, budget} detail per
-    // violation; the stdout line carries names only (r19 — full detail on a
-    // two-violation host-phase window grew the line past the tail guard)
-    val (budgetNote, budgetNoteCompact): (String, String) = {
-      val p = java.nio.file.Paths.get("STREAM_BUDGET.json")
-      if (!java.nio.file.Files.exists(p)) ("", "")
-      else try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(p.toFile)
-        import scala.jdk.CollectionConverters._
-        // per_sf schema (round 13): budgets keyed by an sf-dir substring
-        // tag; the first tag the bench dir contains selects the ceilings
-        val entry = Option(node.get("per_sf")).flatMap { ps =>
-          ps.fields().asScala.find(e => sfDir.contains(e.getKey)).map(_.getValue)
-        }
-        if (entry.isEmpty) ("", "")
-        else {
-          val budgets = entry.get.get("budgets_s").fields().asScala
-            .map(e => e.getKey -> e.getValue.asDouble()).toMap
-          val viol = results.collect {
-            case (k, v) if budgets.get(k).exists(v > _) => (k, v)
-          }
-          if (viol.isEmpty)
-            (s""","stream_budget_ok":true""", s""","stream_budget_ok":true""")
-          else (
-            s""","stream_budget_violations":${viol.map { case (k, v) =>
-              s""""$k":{"wall":${r3(v)},"budget":${budgets(k)}}"""
-            }.mkString("{", ",", "}")}""",
-            s""","stream_budget_violations":${viol.map(_._1).sorted
-              .map("\"" + _ + "\"").mkString("[", ",", "]")}""")
-        }
-      } catch { case _: Exception => ("", "") }
-    }
-    // Two renderings of one measurement:
-    //  - stdout: COMPACT (short qNN keys, 3-decimal secs) — the driver's
-    //    capture keeps only a ~2k-char tail of the stream, and round 5's
-    //    full-precision line (~4.6k chars) arrived truncated/unparseable.
-    //    All qNN prefixes are unique, so nothing is lost but digits.
-    //  - bench_out.json: the complete full-name, full-precision artifact.
-    // The compact rendering is only lossless while qNN prefixes are unique;
-    // a future duplicate would silently last-win-corrupt the stdout
-    // artifact, so it fails the run instead.
-    val dupPrefixes = results.map(_._1.takeWhile(_ != '_'))
-      .groupBy(identity).collect { case (p, g) if g.size > 1 => p }
-    require(dupPrefixes.isEmpty,
-      s"duplicate bench-key prefixes would corrupt the compact stdout line: " +
-        dupPrefixes.mkString(", "))
-    def line(keyOf: String => String, fmt: Double => String, extra: String,
-             budget: String = budgetNote): String = {
-      val qs = results.map { case (k, v) => "\"" + keyOf(k) + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_ex_q74":${r3(exQ74)}$duckdb$budget,"queries":$qs$extra,"sf":"$sfDir"}"""
-    }
-    // 2-decimal stdout values (r17): the 3-decimal compact line outgrew the
-    // driver's 2000-char tail at 136 queries (BENCH_r16.json parsed: null)
-    printCompact(line(_.takeWhile(_ != '_'), d => f"$d%.2f", extra = "",
-        budget = budgetNoteCompact),
-      f"BENCH total ${r3(total)}s over ${results.size} queries " +
-        "(full artifact: bench_out.json); compact line follows.")
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // Round-over-round regression ledger: BEFORE overwriting the committed
-    // bench_out.json, diff this capture against it and emit BENCH_DELTA.json
-    // with a >1.5× flag column — the round-10 dedup-family drift was caught
-    // only by judge archaeology over two rounds' artifacts; this makes the
-    // same comparison a mechanical per-capture output. Sub-0.2 s priors are
-    // never flagged (pure scheduling-floor jitter flips ratios freely).
-    writeDelta(java.nio.file.Paths.get(out), results)
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line(identity, _.toString, extra = duckdbFull) + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    regenerateRatioTable(results, duckdbVals, sfDir)
-    spark.stop()
   }
 
   /** Runs the whole bench through the interleaved A/B orchestrator: dumps
-    * the oracle SQL, spawns `tools/bench_ab.py` (which launches a serve-mode
-    * copy of this main and one DuckDB connection and alternates engines
-    * within each query block), then re-emits bench_out.json's content as
-    * the COMPACT one-line stdout artifact the driver tails (short qNN keys,
-    * 3-decimal secs — the full-precision artifact incl. per-query spreads
-    * is bench_out.json; per-sample data is BENCH_AB.json). Returns false —
-    * without touching any artifact — when the orchestrator or its
-    * prerequisites are unavailable, so the caller falls back to the legacy
-    * in-JVM single-engine pass.
+    * the oracle SQL, spawns `tools/bench_ab.py`, then re-emits
+    * bench_out.json's content as the COMPACT one-line stdout artifact
+    * (short qNN keys, 2-decimal secs — full precision and the per-query
+    * spreads stay in bench_out.json; per-sample data is BENCH_AB.json).
+    * Returns the cause when a prerequisite is missing or the orchestrator
+    * fails; this main touches no artifact in that case.
     */
-  private def delegateToInterleavedAb(sfDir: String): Boolean = {
-    val script = java.nio.file.Paths.get("tools/bench_ab.py")
-    if (!java.nio.file.Files.exists(script)) return false
-    def pythonOk: Boolean =
-      try new ProcessBuilder("python3", "-c", "import duckdb").inheritIO()
-        .start().waitFor() == 0
-      catch { case _: Exception => false }
-    if (!pythonOk) {
-      System.err.println("BENCH: python3/duckdb unavailable — falling back " +
-        "to the legacy single-engine pass (no same-window noise bands)")
-      return false
-    }
-    // oracle dump: the same JSON escaping contract as graft.Verify
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c    => c.toString
-    } + "\""
-    val oraclePath = java.nio.file.Files.createTempFile("graft_oracle_sql", ".json")
-    java.nio.file.Files.write(oraclePath,
-      SparkEntry.oracleSql.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}:${q(v)}" }
-        .mkString("{", ",", "}").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private def capture(sfDir: String): Option[String] = {
+    val script = Paths.get("tools/bench_ab.py")
+    if (!Files.exists(script))
+      return Some(s"$script not found (run from the repository root)")
+    val duckdbCheck =
+      try new ProcessBuilder("python3", "-c", "import duckdb").inheritIO().start().waitFor()
+      catch {
+        case e: java.io.IOException => return Some(s"python3 is not runnable (${e.getMessage})")
+      }
+    if (duckdbCheck != 0) return Some("python3 cannot import duckdb")
+    val oraclePath = Files.createTempFile("graft_oracle_sql", ".json")
+    Verify.writeOracleSql(oraclePath)
     val pb = new ProcessBuilder("python3", script.toString, sfDir,
       oraclePath.toString, "3")
-    pb.redirectErrorStream(false)
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
     // bench_ab.py's progress lines go to OUR stderr; stdout stays clean for
-    // the single-line driver artifact emitted below
+    // the single-line artifact emitted below
     val proc = pb.start()
     val drain = new Thread(() => {
       val r = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
@@ -277,23 +64,36 @@ object Bench {
     drain.setDaemon(true); drain.start()
     val code = proc.waitFor()
     drain.join(5000)
-    java.nio.file.Files.deleteIfExists(oraclePath)
-    if (code != 0) {
-      System.err.println(s"BENCH: bench_ab.py exited $code — falling back " +
-        "to the legacy single-engine pass")
-      return false
-    }
-    // compact stdout line from the full artifact (the driver keeps only a
-    // bounded tail of stdout; see the rendering note in main)
-    val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
-    val abOut = java.nio.file.Paths.get("bench_out.json")
-    if (outPath != abOut && java.nio.file.Files.exists(abOut))
-      java.nio.file.Files.copy(abOut, outPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(oraclePath)
+    if (code != 0) return Some(s"$script exited $code")
+    val outPath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
+    val abOut = Paths.get("bench_out.json")
+    if (outPath != abOut)
+      Files.copy(abOut, outPath, StandardCopyOption.REPLACE_EXISTING)
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(abOut.toFile)
+    printCompact(compactLine(node, sfDir),
+      s"BENCH total ${r3(node.get("value").asDouble())}s over " +
+        s"${node.get("queries").size} queries (A/B window; full artifact: " +
+        "bench_out.json); compact line follows.")
+    None
+  }
+
+  private def r3(d: Double) = math.rint(d * 1000) / 1000
+
+  /** The stdout rendering of bench_out.json's content. A capture that keeps
+    * only a ~2000-char tail of stdout must still parse it, so the line
+    * carries short qNN keys (all prefixes are unique — a duplicate would
+    * silently last-win-corrupt the line, so it fails the run instead) and
+    * 2-decimal secs (r17: the 3-decimal line measured 2053 chars at 136
+    * queries and BENCH_r16.json shipped `parsed: null`).
+    * `stream_budget_violations` passes through as NAMES ONLY (r19: the full
+    * {wall, budget} detail stays in bench_out.json — two violations grew the
+    * full-detail line to 1958 chars and tripped printCompact's guard), and
+    * the ~110-char constant `capture` field is dropped.
+    */
+  private def compactLine(node: com.fasterxml.jackson.databind.JsonNode,
+                          sfDir: String): String = {
     import scala.jdk.CollectionConverters._
-    def r3(d: Double) = math.rint(d * 1000) / 1000
     val queries = node.get("queries").fields().asScala
       .map(e => e.getKey -> e.getValue.asDouble()).toSeq.sortBy(_._1)
     val dupPrefixes = queries.map(_._1.takeWhile(_ != '_'))
@@ -301,38 +101,20 @@ object Bench {
     require(dupPrefixes.isEmpty,
       s"duplicate bench-key prefixes would corrupt the compact stdout line: " +
         dupPrefixes.mkString(", "))
-    // 2-decimal values and NO noise/capture passthrough (r17, verdict
-    // What's-wrong #3): the r16 compact line measured 2053 chars — 53 over
-    // the driver's 2000-char stdout tail — so BENCH_r16.json shipped with
-    // `parsed: null`. This rendering measures ~1725 chars on the same
-    // capture; full precision + noise + capture stay in bench_out.json.
     val qs = queries.map { case (k, v) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + f"$v%.2f"
     }.mkString("{", ",", "}")
-    // stream_budget_violations pass through as NAMES ONLY (r19): the full
-    // {wall, budget} detail stays in bench_out.json — a host-phase window
-    // with two violations grew the full-detail line to 1958 chars, which
-    // tripped printCompact's loud-fail guard and exited the whole capture
-    // nonzero. The capture field is likewise dropped from stdout (a
-    // ~110-char constant already committed in bench_out.json).
     val passthrough = (
       Seq("duckdb_committed", "stream_budget_ok")
         .flatMap(f => Option(node.get(f)).map(v => s""""$f":$v""")) ++
       Option(node.get("stream_budget_violations")).map { v =>
-        import scala.jdk.CollectionConverters._
         s""""stream_budget_violations":${v.fieldNames().asScala.toSeq.sorted
           .map("\"" + _ + "\"").mkString("[", ",", "]")}"""
       }
-    ).mkString(",")
-    val line = s"""{"metric":"total","value":${r3(node.get("value").asDouble())},""" +
+    ).map(_ + ",").mkString
+    s"""{"metric":"total","value":${r3(node.get("value").asDouble())},""" +
       s""""unit":"sec","total_ex_q74":${r3(node.get("total_ex_q74").asDouble())},""" +
-      (if (passthrough.nonEmpty) passthrough + "," else "") +
-      s""""queries":$qs,"sf":"$sfDir"}"""
-    printCompact(line,
-      f"BENCH total ${r3(node.get("value").asDouble())}s over " +
-        s"${queries.size} queries (A/B window; full artifact: " +
-        "bench_out.json); compact line follows.")
-    true
+      passthrough + s""""queries":$qs,"sf":"$sfDir"}"""
   }
 
   /** Emits the compact stdout line behind enough blank-line padding that
@@ -361,15 +143,16 @@ object Bench {
   }
 
   /** stdin/stdout line protocol for the interleaved A/B orchestrator
-    * (`tools/bench_ab.py`). Commands:
+    * (`tools/bench_ab.py`), on one long-lived session. Commands:
     *   `LIST`        → `QUERIES <name,name,…>` (the declared bench surface)
     *   `RUN <name>`  → one fresh-plan collect() of the named query, timed;
     *                   replies `TIME <name> <secs>` (or `FAIL <name> <cls>`)
-    *   `CLEAR`       → clearCache + System.gc (the per-query-block hygiene
-    *                   normal mode applies after each query's runs; the
-    *                   orchestrator sends it BETWEEN query blocks so the
-    *                   deliberately-cached ANN index halves keep their
-    *                   within-block amortization, same as normal mode)
+    *   `CLEAR`       → clearCache + System.gc (untimed hygiene the
+    *                   orchestrator sends BETWEEN query blocks: the next
+    *                   query must not pay the previous one's allocation
+    *                   debt as a GC pause, nor inherit the caches it pinned;
+    *                   the deliberately-cached ANN index halves keep their
+    *                   within-block amortization)
     *   `PLAN <name>` → `PLAN <name> <fp>`: a 16-hex fingerprint of the
     *                   query's scrubbed optimized logical plan, captured as
     *                   a side effect of the most recent `RUN <name>` (so it
@@ -389,14 +172,47 @@ object Bench {
     *   `QUIT`        → `BYE`, exit.
     * Protocol replies go to stdout (log4j writes to stderr); the
     * orchestrator ignores any stdout line that is not a protocol reply.
+    *
+    * Each RUN builds a FRESH plan and collects the result rows — the same
+    * work the DuckDB oracle pays per query (plan + execute + fetch).
+    * Re-executing a cached AQE plan would reuse materialized shuffle stages
+    * and report final-stage-only latency; `count()` would rewrap the query
+    * in a new aggregate plan and let Catalyst drop the result-shaping work
+    * a real client consumes. (One declared exception: ANN index halves —
+    * IVF centroids + inverted lists — are built once per corpus and
+    * amortized across runs, the way an ANN index is meant to be used.)
     */
-  private def serve(spark: SparkSession, sfDir: String): Unit = {
+  private def serve(sfDir: String): Unit = {
+    val cpus = SparkEntry.cpus
+    val spark = SparkEntry.configure(
+      SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        // Shuffle/spill scratch on tmpfs when the host has one: the bench
+        // measures operator latency, not the local disk's fsync jitter.
+        .config("spark.local.dir", graft.streaming.EventStreams.scratchBase)
+        // Same posture for the session warehouse (r19): the certification
+        // queries rebuild their managed artifacts (q114 band/text tables,
+        // q129/q137 IVF halves, q89 bucket tables, q90 snapshot versions)
+        // from the parquet inputs on EVERY call, so the warehouse holds
+        // throwaway derived data and its local-disk fsync latency is
+        // measurement noise, not operator cost — a deployment's warehouse
+        // is a distributed store whose write bandwidth this host cannot
+        // emulate either way. Parameterised: SPARK_GRAFT_WAREHOUSE
+        // overrides (e.g. to point a durability test at real disk).
+        // Measured (med-of-7, both orders): q89 0.35->0.18 s,
+        // q114 2.69->2.16 s best-window, q137 1.72->1.65 s, q90/q129
+        // neutral-to-better.
+        .config("spark.sql.warehouse.dir",
+          sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
+            graft.StageDir.scratchBase + "/graft_warehouse"))
+        .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     val qs = SparkEntry.freshQueries
     val planFps = scala.collection.mutable.Map.empty[String, String]
-    val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-      System.out, java.nio.charset.StandardCharsets.UTF_8), true)
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      System.in, java.nio.charset.StandardCharsets.UTF_8))
+    val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(System.out, UTF_8), true)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in, UTF_8))
     out.println("READY")
     var line = in.readLine()
     while (line != null && line.trim != "QUIT") {
@@ -420,8 +236,7 @@ object Bench {
                 val dt = (System.nanoTime() - t0) / 1e9
                 // fingerprint AFTER the timed collect: the optimized plan
                 // is already materialized, so this adds no planning cost
-                // to the timed wall (it is outside the TIME measurement
-                // window only in the sense that collect already paid it)
+                // to the timed wall
                 try planFps(name) = planFingerprint(df, sfDir)
                 catch { case _: Throwable => () }
                 out.println(f"TIME $name $dt%.6f")
@@ -439,6 +254,7 @@ object Bench {
       line = in.readLine()
     }
     out.println("BYE")
+    spark.stop()
   }
 
   /** 16-hex SHA-256 prefix of the query's optimized logical plan string
@@ -449,16 +265,13 @@ object Bench {
     * envelope rule uses this as its same-code predicate. Deterministic
     * across JVMs for batch plans; pinned by `PlanFingerprintSpec`.
     */
-  private[graft] def planFingerprint(df: org.apache.spark.sql.DataFrame,
-                                     sfDir: String): String = {
+  private[graft] def planFingerprint(df: DataFrame, sfDir: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(scrubbedPlan(df, sfDir)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    md.digest(scrubbedPlan(df, sfDir).getBytes(UTF_8))
       .take(8).map(b => f"$b%02x").mkString
   }
 
-  private[graft] def scrubbedPlan(df: org.apache.spark.sql.DataFrame,
-                                  sfDir: String): String =
+  private[graft] def scrubbedPlan(df: DataFrame, sfDir: String): String =
     df.queryExecution.optimizedPlan.toString
       .replace(sfDir, "<sf>")
       .replaceAll("#\\d+[A-Za-z]*", "#x")
@@ -474,120 +287,4 @@ object Bench {
       .replaceAll("(?i)rdd[ _]?\\[?\\d+\\]?", "rdd_x")
       .replaceAll("file:[^\\s,\\)\\]]+", "<uri>")
       .replaceAll("/(?:tmp|root)/[^\\s,\\)\\]]+", "<path>")
-
-  /** Diffs this capture against the previously committed `bench_out.json`
-    * (if any) and writes `BENCH_DELTA.json`: per-query prev/cur/ratio plus
-    * a `flagged` list of queries whose wall grew past their NOISE BAND from
-    * a ≥0.2 s prior.
-    *
-    * Noise band (round 12): when a committed `BENCH_AB.json` exists — the
-    * interleaved A/B capture with ≥3 same-window samples per engine per
-    * query — a query's flag threshold is
-    * `max(1.5, observed within-window spark spread × 1.15)`; without it the
-    * threshold is the old bare 1.5×. Twice (r10 dedup family, r11 driver
-    * window) a bare-ratio flag list needed judge archaeology to separate
-    * host interference from regression; the committed spread makes the same
-    * call mechanical — a 1.6× move on a query whose own same-window samples
-    * spread 1.7× is noise, not regression.
-    */
-  private def writeDelta(prevPath: java.nio.file.Path,
-                         results: Seq[(String, Double)]): Unit = {
-    if (!java.nio.file.Files.exists(prevPath)) return
-    def queriesOf(p: java.nio.file.Path): Map[String, Double] =
-      try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(p.toFile)
-        import scala.jdk.CollectionConverters._
-        node.get("queries").fields().asScala
-          .map(e => e.getKey -> e.getValue.asDouble()).toMap
-      } catch { case _: Exception => Map.empty }
-    val prev = queriesOf(prevPath)
-    if (prev.isEmpty) return
-    // per-query spark spread (max/min over same-window samples) from the
-    // committed A/B artifact, when one exists
-    val spread: Map[String, Double] = {
-      val p = java.nio.file.Paths.get("BENCH_AB.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(p.toFile)
-        import scala.jdk.CollectionConverters._
-        node.get("queries").fields().asScala.flatMap { e =>
-          Option(e.getValue.get("spark_spread")).map(v => e.getKey -> v.asDouble())
-        }.toMap
-      } catch { case _: Exception => Map.empty }
-    }
-    def band(k: String): Double = math.max(1.5, spread.getOrElse(k, 1.0) * 1.15)
-    def r3(d: Double) = math.rint(d * 1000) / 1000
-    val rows = results.collect { case (k, cur) if prev.get(k).exists(_ > 0) && cur > 0 =>
-      (k, prev(k), cur, cur / prev(k))
-    }
-    val flagged = rows.collect { case (k, p, _, ratio) if ratio > band(k) && p >= 0.2 => k }
-    val body = rows.sortBy(_._1).map { case (k, p, c, ratio) =>
-      s""""$k":{"prev":${r3(p)},"cur":${r3(c)},"ratio":${r3(ratio)},"band":${r3(band(k))}}"""
-    }.mkString("{", ",", "}")
-    val json = s"""{"flagged":${flagged.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""band_source":"${if (spread.isEmpty) "bare-1.5x" else "BENCH_AB.json spark_spread x1.15, floor 1.5x"}",""" +
-      s""""new":${results.collect { case (k, _) if !prev.contains(k) => "\"" + k + "\"" }
-        .sorted.mkString("[", ",", "]")},"queries":$body}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DELTA.json"),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  /** Rewrites the generated per-query Spark-vs-DuckDB ratio table between
-    * the README's BENCH_RATIOS markers (no-op unless both markers are
-    * already present, so the rewrite can only ever target the repo README).
-    * Regenerated by every bench run that finds a committed
-    * `DUCKDB_BASELINE.json`, so the per-query floor-vs-plan decomposition
-    * is a committed artifact instead of a per-round re-derivation.
-    */
-  private def regenerateRatioTable(results: Seq[(String, Double)],
-                                   duckdbVals: Map[String, Double],
-                                   sfDir: String): Unit = {
-    if (duckdbVals.isEmpty) return
-    val rp = java.nio.file.Paths.get("README.md")
-    if (!java.nio.file.Files.exists(rp)) return
-    // only rewrite a README that already carries the generated section's
-    // markers — a bench launched from a different cwd must not append a
-    // ratio table to whatever unrelated README.md it happens to find
-    val txt0 = java.nio.file.Files.readString(rp)
-    val begin = "<!-- BENCH_RATIOS_BEGIN (generated by graft.Bench — do not edit by hand) -->"
-    val end = "<!-- BENCH_RATIOS_END -->"
-    if (!txt0.contains(begin) || !txt0.contains(end)) return
-    def f3(d: Double) = f"$d%.3f"
-    val rows = results.sortBy(_._1).map { case (k, v) =>
-      duckdbVals.get(k) match {
-        case Some(d) if d > 0 && v > 0 =>
-          val flag =
-            if (v <= d) "spark wins"
-            else if (v <= 2 * d) "within 2×"
-            else if (k.contains("_stream_")) "streaming replay machinery" // micro-batch + state-store floor, no DuckDB analog
-            else if (v <= 0.45) "scheduling floor" // DuckDB μs-scale, Spark fixed ~0.1–0.3 s/query
-            else ""
-          s"| $k | ${f3(v)} | ${f3(d)} | ${f"${v / d}%.2f"} | $flag |"
-        case _ => s"| $k | ${f3(v)} | — | — | |"
-      }
-    }
-    val total = results.map(_._2).sum
-    val dTotal = duckdbVals.values.sum
-    val nWin = results.count { case (k, v) => duckdbVals.get(k).exists(v <= _) }
-    val table = (Seq(
-      begin,
-      "",
-      s"_Regenerated by `graft.Bench` (min-of-3, fresh plan per run) against the",
-      s"committed `DUCKDB_BASELINE.json`, same oracle SQL, `$sfDir`. Shared-VM",
-      s"noise band is ±20%; compare pairwise trends, not single cells. Queries",
-      s"flagged 'scheduling floor' answer in microseconds in DuckDB while Spark",
-      s"pays its fixed ~0.1–0.3 s per-query planning/scheduling cost; 'streaming",
-      s"replay machinery' marks the bounded micro-batch replays whose cost is",
-      s"offset-WAL/state-store/checkpoint setup with no DuckDB analog (the",
-      s"oracle compares a batch reconstruction). Both are fixed costs that",
-      s"amortize with data volume, not plan defects (see the audit above).",
-      s"Totals this capture: Spark ${f3(total)} s, DuckDB ${f3(dTotal)} s;",
-      s"$nWin/${results.size} queries at-or-below DuckDB outright._",
-      "",
-      "| query | spark s | duckdb s | spark÷duckdb | note |",
-      "|---|---|---|---|---|") ++ rows ++ Seq("", end)).mkString("\n")
-    val pre = txt0.substring(0, txt0.indexOf(begin))
-    val post = txt0.substring(txt0.indexOf(end) + end.length)
-    java.nio.file.Files.writeString(rp, pre + table + post)
-  }
 }

@@ -77,8 +77,8 @@ object IngestCli {
     val owned = SparkSession.getDefaultSession.isEmpty
     val spark = SparkEntry.configure(
       SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+        .master(sys.env.getOrElse("SPARK_MASTER", s"local[${SparkEntry.cpus}]"))
+        .config("spark.sql.shuffle.partitions", SparkEntry.cpus)
         .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+import java.nio.file.{Files, Path, Paths}
+/** Driver-run correctness dump: each SparkEntry.freshQueries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -9,7 +9,7 @@ object Verify {
     // tooling; the driver always passes exactly two)
     val Array(sfDir, outDir) = args.take(2)
     val filters = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus
     val spark = SparkEntry.configure(
       SparkSession.builder()
         .master(s"local[$cpus]")
@@ -22,7 +22,7 @@ object Verify {
     // Per-query watchdog: one pathological query must not hang the whole
     // correctness run — cancel its job group after the timeout and move on.
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_S", "300").toLong
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    SparkEntry.freshQueries.toSeq.sortBy(_._1)
       .filter { case (name, _) => filters.isEmpty || filters.exists(name.contains) }
       .foreach { case (name, fn) =>
       val worker = new Thread(() => {
@@ -48,6 +48,15 @@ object Verify {
         worker.join(30000)
       }
     }
+    writeOracleSql(Paths.get(s"$outDir/oracle_sql.json"))
+    spark.stop()
+  }
+
+  /** Writes [[SparkEntry.oracleSql]] as one JSON object (sorted keys): the
+    * DuckDB cross-check (`tools/check_oracles.py`) reads it from a Verify
+    * dump, and `tools/bench_ab.py` reads the copy [[Bench]] hands it.
+    */
+  private[graft] def writeOracleSql(path: Path): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -60,9 +69,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(path, SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}"))
   }
 }

@@ -104,7 +104,7 @@ class MergeUpsertSpec extends AnyFunSuite {
 
   test("the base side never shuffles (broadcast resolution)") {
     // pre-AQE initial plan: exchanges are real nodes, not query stages
-    val df = graft.SparkEntry.queries("q90_merge_upsert")(spark, graft.TestSpark.Sf0001)
+    val df = graft.SparkEntry.freshQueries("q90_merge_upsert")(spark, graft.TestSpark.Sf0001)
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p

@@ -41,7 +41,7 @@ class ResampleProfileSpec extends AnyFunSuite {
 
   test("q96 runs on ONE data exchange (entity repartition), as documented") {
     // pre-AQE initial plan: exchanges are real nodes, not query stages
-    val df = graft.SparkEntry.queries("q96_gapfill_resample")(spark, graft.TestSpark.Sf0001)
+    val df = graft.SparkEntry.freshQueries("q96_gapfill_resample")(spark, graft.TestSpark.Sf0001)
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p

@@ -77,15 +77,16 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!initialPlan(df).toString.contains("rangepartitioning"),
       initialPlan(df).toString)
     val rows = df.collect().toSeq
-    // spark.graft.presentationSort=false restores the distributed range
-    // sort (for big sorted outputs); rows and row ORDER are identical
-    spark.conf.set("spark.graft.presentationSort", "false")
+    // a negative threshold sits below every fan-in, even a reduced output's
+    // 0, so the same query plans the distributed range sort; rows and row
+    // ORDER are identical
+    spark.conf.set("spark.graft.rangeSortRows", "-1")
     try {
       val range = plan("q06_join_broadcast")
       assert(initialPlan(range).toString.contains("rangepartitioning"),
         initialPlan(range).toString)
       assert(range.collect().toSeq == rows)
-    } finally spark.conf.unset("spark.graft.presentationSort")
+    } finally spark.conf.unset("spark.graft.rangeSortRows")
   }
 
   test("fact-sized fan-in derives the distributed range sort BY RULE (r15)") {

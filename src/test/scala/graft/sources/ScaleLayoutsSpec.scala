@@ -150,7 +150,7 @@ class ScaleLayoutsSpec extends AnyFunSuite {
     val dir = TestSpark.Sf0001
     val orders = Tables(spark, dir).orders
     // the q131 staged layout (built by the declared query's own path)
-    val layout = graft.SparkEntry.queries("q131_schema_evolution")(spark, dir)
+    val layout = graft.SparkEntry.freshQueries("q131_schema_evolution")(spark, dir)
     layout.collect() // force the staging
     val root = {
       // re-derive the staged dir the way ensureEvolved names it

@@ -25,13 +25,13 @@ class RocksDbParitySpec extends AnyFunSuite {
   test("stateful replays produce identical rows on the RocksDB state store") {
     val key = "spark.sql.streaming.stateStore.providerClass"
     for (q <- stateful) {
-      val defaultRows = SparkEntry.queries(q)(spark, TestSpark.Sf0001).collect().toSeq
+      val defaultRows = SparkEntry.freshQueries(q)(spark, TestSpark.Sf0001).collect().toSeq
       assert(defaultRows.nonEmpty, s"$q: empty default-provider result")
       val prev = spark.conf.getOption(key)
       spark.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val rocksRows =
-        try SparkEntry.queries(q)(spark, TestSpark.Sf0001).collect().toSeq
+        try SparkEntry.freshQueries(q)(spark, TestSpark.Sf0001).collect().toSeq
         finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       assert(rocksRows == defaultRows, s"$q: RocksDB rows differ from default provider")
     }

@@ -29,7 +29,7 @@ object BenchSf1 {
   lazy val Queries: Seq[String] = SparkEntry.freshQueries.keys.toSeq.sorted
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.cpus
     val spark = SparkEntry.configure(
       SparkSession.builder().master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)

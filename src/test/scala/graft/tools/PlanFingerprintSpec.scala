@@ -25,7 +25,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
   private val sf = TestSpark.Sf0001
 
   test("same query, fresh builds -> identical fingerprint (expr ids scrubbed)") {
-    val q = SparkEntry.queries("q01_scan_count")
+    val q = SparkEntry.freshQueries("q01_scan_count")
     val a = Bench.planFingerprint(q(spark, sf), sf)
     val b = Bench.planFingerprint(q(spark, sf), sf)
     assert(a == b)
@@ -33,7 +33,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
   }
 
   test("isolated session -> same fingerprint (what a fresh server JVM sees)") {
-    val q = SparkEntry.queries("q03_project")
+    val q = SparkEntry.freshQueries("q03_project")
     val a = Bench.planFingerprint(q(spark, sf), sf)
     val s2 = spark.newSession()
     val b = Bench.planFingerprint(q(s2, sf), sf)
@@ -41,7 +41,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
   }
 
   test("a different plan -> different fingerprint (scrubber keeps meaning)") {
-    val df = SparkEntry.queries("q03_project")(spark, sf)
+    val df = SparkEntry.freshQueries("q03_project")(spark, sf)
     val a = Bench.planFingerprint(df, sf)
     val b = Bench.planFingerprint(df.filter("1=1"), sf) // folded, same plan
     val c = Bench.planFingerprint(df.limit(7), sf)
@@ -57,7 +57,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
     // deterministically across fresh builds.
     for (n <- Seq("q54_multimodal_decode", "q74_pack_sequences",
                   "q94_frame_sample", "q95_multimodal_resize")) {
-      val q = SparkEntry.queries(n)
+      val q = SparkEntry.freshQueries(n)
       val scrubbed = Bench.scrubbedPlan(q(spark, sf), sf)
       assert(!scrubbed.matches("(?s).*0x[0-9a-fA-F]{6,}.*"),
         s"$n: JVM address survived the scrub:\n$scrubbed")
@@ -67,7 +67,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
   }
 
   test("fingerprint is stable across the sf dir spelling") {
-    val q = SparkEntry.queries("q01_scan_count")
+    val q = SparkEntry.freshQueries("q01_scan_count")
     val a = Bench.planFingerprint(q(spark, sf), sf)
     val b = Bench.planFingerprint(q(spark, sf + "/"), sf + "/")
     assert(a == b)

@@ -23,19 +23,23 @@ SPARK_GRAFT_BENCH_SERVE=1) and one DuckDB connection through the suite
 query-by-query, alternating engines WITHIN each query block:
 
     spark warmup, duck warmup, then passes x (spark sample, duck sample),
-    then cache-clear + gc (the same per-query hygiene normal bench mode
-    applies — kept BETWEEN blocks so the deliberately-cached ANN index
-    halves retain their within-block amortization, exactly as normal mode)
+    then cache-clear + gc (untimed hygiene, kept BETWEEN blocks so the
+    deliberately-cached ANN index halves retain their within-block
+    amortization)
 
 so both engines sample the same few-second interference window per query,
 and every committed number carries its own spread (max/min over the
-same-window samples). Artifacts, all from one window:
+same-window samples). This is graft.Bench's only capture path: a plain
+`sbt "runMain graft.Bench"` dumps the oracle SQL, runs this tool, and
+prints bench_out.json's compact one-line form. Artifacts, all from one
+window, and written only here:
 
   - BENCH_AB.json       full samples + per-query min/spread/ratio + noise
                         summary (the self-certification artifact)
-  - bench_out.json      graft.Bench-schema Spark pair (mins), so every
-                        downstream consumer (BENCH_DELTA, ratio table,
-                        BenchSf1 comparisons) keeps working unchanged
+  - bench_out.json      the Spark pair (mins) plus the DuckDB pair and the
+                        STREAM_BUDGET.json verdict; graft.Bench renders its
+                        stdout line from this file, and the next capture's
+                        BENCH_DELTA and --adjudicate compare against it
   - DUCKDB_BASELINE.json bench_duckdb.py-schema DuckDB pair (mins)
   - BENCH_DELTA.json    vs the PREVIOUSLY committed bench_out.json, flags
                         computed against max(1.5, same-window spread x1.15)
@@ -489,7 +493,9 @@ def main():
     adjudicate_out = flags.get("adjudicate")
     if (only is None) != (adjudicate_out is None):
         sys.exit("bench_ab.py: --only and --adjudicate must be used together")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # graft.SparkEntry.cpus's default: every core this process may use
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     oracles = json.load(open(oracle_path))
 
     # previously committed pair, read BEFORE this capture overwrites it
@@ -695,7 +701,7 @@ def main():
         "protocol": "one graft.Bench JVM (serve mode) + one DuckDB "
             "connection, engines alternated within each query block "
             "(spark warmup, duck warmup, then passes x (spark, duck)); "
-            "cache-clear + gc between blocks (normal-mode hygiene); "
+            "cache-clear + gc between blocks (untimed hygiene); "
             "spread = max/min over the same-window samples; committed "
             "value = min (least-interfered run)",
         "queries": per,
@@ -719,7 +725,8 @@ def main():
         json.dump(ab, f, indent=1, sort_keys=True)
         f.write("\n")
 
-    # ---- bench_out.json: graft.Bench schema, so downstream tools keep working
+    # ---- bench_out.json: the Spark pair graft.Bench prints and the next
+    # capture's BENCH_DELTA / --adjudicate compare against
     duck_map = {n: v["duckdb_min"] for n, v in per.items()
                 if isinstance(v["duckdb_min"], float)}
     bench_out = {
@@ -741,7 +748,8 @@ def main():
         },
         "sf": sfdir,
     }
-    # streaming wall budgets (same check graft.Bench normal mode applies)
+    # streaming wall budgets: per-replay ceilings for the stream queries,
+    # which have no DuckDB ratio to bound them
     try:
         sb = json.load(open(f"{REPO}/STREAM_BUDGET.json"))
         entry = next((v for k, v in sb.get("per_sf", {}).items() if k in sfdir),
@@ -873,8 +881,9 @@ def main():
 
 
 def regenerate_ratio_table(per, s_tot, d_tot, sfdir, passes):
-    """Same generated README section as graft.Bench.regenerateRatioTable,
-    fed by the A/B window's pair (only rewrites between existing markers)."""
+    """Rewrites README.md's generated per-query Spark-vs-DuckDB ratio table
+    from the A/B window's pair. Only rewrites between existing
+    BENCH_RATIOS markers, so a checkout without them is left alone."""
     rp = f"{REPO}/README.md"
     begin = ("<!-- BENCH_RATIOS_BEGIN (generated by graft.Bench — "
              "do not edit by hand) -->")
